@@ -166,6 +166,37 @@ object Bench {
     math.min(a, b)
   }
 
+  /** fixed-point JSON numbers: the default locale must not turn the
+    * decimal point into a comma (de_DE, fr_FR, ...) */
+  private[graft] def num3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def num1(v: Double): String = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+
+  /** ms-precision per-query walls for the last stdout line: the
+    * contract's "queries" map, which 3-decimal rounding bounds at
+    * ~6 KB for 239 entries */
+  private def qjsonMs(rs: Seq[(String, Double, Option[String])]): String =
+    rs.map { case (k, v, _) => s"\"" + k + "\":" + num3(v) }.mkString("{", ",", "}")
+
+  /** the LAST stdout line, the contract line consumers json-parse:
+    * the per-query map first, headline scalars last (see main) */
+  private[graft] def contractLine(sfDir: String, results: Seq[(String, Double, Option[String])],
+                                  isolated: Seq[(String, Double, Option[String])], slots: Int,
+                                  sumOverWall: Double, calibSec: Double, calibDrift: Double,
+                                  calibMemDrift: Double, calibAttempts: Int, calibMidJson: String,
+                                  flagged: Boolean, slopeScalars: String, wall: Double): String =
+    s"""{"metric":"total","unit":"sec","scalars_only":true,"sf":"$sfDir",""" +
+      s""""queries":${qjsonMs(results)},"isolated":${qjsonMs(isolated)},""" +
+      s""""n_queries":${results.size},"error_count":${results.count(_._3.isDefined)},""" +
+      s""""isolated_error_count":${isolated.count(_._3.isDefined)},""" +
+      s""""slots":$slots,"sum_over_wall":${num3(sumOverWall)},""" +
+      s""""contended":${sumOverWall > slots * 1.2},""" +
+      s""""calib_sec":${num3(calibSec)},"calib_drift":${num3(calibDrift)},""" +
+      s""""calib_drifted":${calibDrift > 1.3},""" +
+      s""""calib_mem_drift":${num3(calibMemDrift)},""" +
+      s""""calib_attempts":$calibAttempts,$calibMidJson,"flagged":$flagged$slopeScalars,""" +
+      s""""full_maps":"bench_full.json","walls_file":"bench_walls.json",""" +
+      s""""value":$wall}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
@@ -221,13 +252,6 @@ object Bench {
     def jstr(s: String): String = QUtil.jsonEscape(s)
     def qjson(rs: Seq[(String, Double, Option[String])]): String =
       rs.map { case (k, v, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // ms-precision per-query walls for the FINAL driver line (r18
-    // verdict #2: PERF's per-query table was structurally empty
-    // because no parsed line carried the contract's "queries" map;
-    // 3-decimal rounding bounds the 239-entry map at ~6 KB)
-    def qjsonMs(rs: Seq[(String, Double, Option[String])]): String =
-      rs.map { case (k, v, _) => s"\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
     def ejson(rs: Seq[(String, Double, Option[String])]): String =
       rs.collect { case (k, _, Some(e)) => s"\"" + k + "\":" + jstr(e) }
         .mkString("{", ",", "}")
@@ -293,17 +317,17 @@ object Bench {
         slopeSow = sow2
         val ratios = results.map { case (k, v, _) =>
           val v2 = results2.find(_._1 == k).map(_._2).getOrElse(Double.NaN)
-          s"\"" + k + "\":" + f"${v2 / v}%.3f"
+          s"\"" + k + "\":" + num3(v2 / v)
         }.mkString("{", ",", "}")
         // scalars + the bounded isolated map, for the compact line
         slopeCompact =
           s""","slope":{"factor":$slopeFactor,""" +
           s""""isolated_sfx":${qjson(isolatedSfx)},""" +
           s""""isolated_sfx_errors":${ejson(isolatedSfx)},""" +
-          s""""build_sec":${f"$buildSec%.1f"},""" +
+          s""""build_sec":${num1(buildSec)},""" +
           s""""wall_sf":$wall,"wall_sfx":$wall2,""" +
-          s""""wall_ratio":${f"${wall2 / wall}%.3f"},""" +
-          s""""sum_over_wall_sfx":${f"$sow2%.3f"},""" +
+          s""""wall_ratio":${num3(wall2 / wall)},""" +
+          s""""sum_over_wall_sfx":${num3(sow2)},""" +
           s""""contended_sfx":${sow2 > slots * 1.2}}"""
         // big maps first, scalars last — same tail-truncation
         // discipline as the top-level line
@@ -311,10 +335,10 @@ object Bench {
           s""""errors_sfx":${ejson(results2)},""" +
           s""""isolated_sfx":${qjson(isolatedSfx)},""" +
           s""""isolated_sfx_errors":${ejson(isolatedSfx)},""" +
-          s""""build_sec":${f"$buildSec%.1f"},""" +
+          s""""build_sec":${num1(buildSec)},""" +
           s""""wall_sf":$wall,"wall_sfx":$wall2,""" +
-          s""""wall_ratio":${f"${wall2 / wall}%.3f"},""" +
-          s""""sum_over_wall_sfx":${f"$sow2%.3f"},""" +
+          s""""wall_ratio":${num3(wall2 / wall)},""" +
+          s""""sum_over_wall_sfx":${num3(sow2)},""" +
           s""""contended_sfx":${sow2 > slots * 1.2}}"""
       }
     // Post-suite calibration re-probe (r11 verdict "what's wrong" #1):
@@ -391,7 +415,7 @@ object Bench {
     // capture shows its transient; an exhausted one shows the
     // sustained load that kept it flagged
     val calibHistJson = calibHistory
-      .map { case (c, m) => s"""[${f"$c%.3f"},${f"$m%.3f"}]""" }
+      .map { case (c, m) => s"""[${num3(c)},${num3(m)}]""" }
       .mkString("[", ",", "]")
     // leg localization from the mid-suite probe: which bracket (pre→mid
     // = sf leg, mid→post = sfx leg) actually drifted. "none" = clean,
@@ -414,9 +438,9 @@ object Bench {
       }
     val calibMidJson =
       if (calibMidInt.isNaN) s""""flag_leg":"unknown""""
-      else s""""calib_mid":${f"$calibMidInt%.3f"},"calib_mem_mid":${f"$calibMidMem%.3f"},"flag_leg":"$flagLeg""""
+      else s""""calib_mid":${num3(calibMidInt)},"calib_mem_mid":${num3(calibMidMem)},"flag_leg":"$flagLeg""""
     val scalarTail =
-      s""""errors":${ejson(results)},"isolated_errors":${ejson(isolated)},"slots":$slots,"sum_over_wall":${f"$sumOverWall%.3f"},"contended":${sumOverWall > slots * 1.2},"calib_pre":${f"$calibPre%.3f"},"calib_post":${f"$calibPost%.3f"},"calib_drift":${f"$calibDrift%.3f"},"calib_drifted":${calibDrift > 1.3},"calib_sec":${f"$calibSec%.3f"},"calib_mem_pre":${f"$calibMemPre%.3f"},"calib_mem_post":${f"$calibMemPost%.3f"},"calib_mem_drift":${f"$calibMemDrift%.3f"},"calib_attempts":$calibAttempts,"calib_post_history":$calibHistJson,$calibMidJson,"flagged":$flagged,"value":$wall}"""
+      s""""errors":${ejson(results)},"isolated_errors":${ejson(isolated)},"slots":$slots,"sum_over_wall":${num3(sumOverWall)},"contended":${sumOverWall > slots * 1.2},"calib_pre":${num3(calibPre)},"calib_post":${num3(calibPost)},"calib_drift":${num3(calibDrift)},"calib_drifted":${calibDrift > 1.3},"calib_sec":${num3(calibSec)},"calib_mem_pre":${num3(calibMemPre)},"calib_mem_post":${num3(calibMemPost)},"calib_mem_drift":${num3(calibMemDrift)},"calib_attempts":$calibAttempts,"calib_post_history":$calibHistJson,$calibMidJson,"flagged":$flagged,"value":$wall}"""
     val fullLine =
       s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries":${qjson(results)},"isolated":${qjson(isolated)}$slopeJson,""" + scalarTail
     // the full line (with the 195-entry per-query maps) ALSO goes to a
@@ -450,22 +474,11 @@ object Bench {
       if (slopeFactor < 2 || slopeWallSfx.isNaN) ""
       else
         s""","slope_factor":$slopeFactor,"wall_sfx":$slopeWallSfx,""" +
-          s""""wall_ratio":${f"${slopeWallSfx / wall}%.3f"},""" +
-          s""""sum_over_wall_sfx":${f"$slopeSow%.3f"},""" +
+          s""""wall_ratio":${num3(slopeWallSfx / wall)},""" +
+          s""""sum_over_wall_sfx":${num3(slopeSow)},""" +
           s""""contended_sfx":${slopeSow > slots * 1.2}"""
-    println(
-      s"""{"metric":"total","unit":"sec","scalars_only":true,"sf":"$sfDir",""" +
-      s""""queries":${qjsonMs(results)},"isolated":${qjsonMs(isolated)},""" +
-      s""""n_queries":${results.size},"error_count":${results.count(_._3.isDefined)},""" +
-      s""""isolated_error_count":${isolated.count(_._3.isDefined)},""" +
-      s""""slots":$slots,"sum_over_wall":${f"$sumOverWall%.3f"},""" +
-      s""""contended":${sumOverWall > slots * 1.2},""" +
-      s""""calib_sec":${f"$calibSec%.3f"},"calib_drift":${f"$calibDrift%.3f"},""" +
-      s""""calib_drifted":${calibDrift > 1.3},""" +
-      s""""calib_mem_drift":${f"$calibMemDrift%.3f"},""" +
-      s""""calib_attempts":$calibAttempts,$calibMidJson,"flagged":$flagged$slopeScalars,""" +
-      s""""full_maps":"bench_full.json","walls_file":"bench_walls.json",""" +
-      s""""value":$wall}""")
+    println(contractLine(sfDir, results, isolated, slots, sumOverWall, calibSec, calibDrift,
+      calibMemDrift, calibAttempts, calibMidJson, flagged, slopeScalars, wall))
     spark.stop()
     if (results.exists(_._3.isDefined)) {
       System.err.println(s"[bench] ${results.count(_._3.isDefined)} queries FAILED")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.functions.{CosineSim, GzipCompress, GzipDecompress, HyperplaneBuckets, HyperplaneBucketsMd5, MinHashSignature, MinHashSignatureMd5, RollingHash, SimHashBits, SimHashBits128, SimHashBitsMd5, WordShingles}
-import graft.sources.{OtlpLogsJsonToPb, OtlpLogsPbToJson, OtlpLogsPbToJsonSafe, OtlpMetricsJsonToPb, OtlpMetricsPbToJson, OtlpMetricsPbToJsonSafe, OtlpSpansJsonToPb, OtlpSpansPbToJson, OtlpSpansPbToJsonSafe}
+import graft.sources.{OtlpLogsJsonToPb, OtlpLogsPbToJson, OtlpLogsPbToRows, OtlpLogsPbToRowsSafe, OtlpMetricsJsonToPb, OtlpMetricsPbToJson, OtlpMetricsPbToJsonSafe, OtlpSpansJsonToPb, OtlpSpansPbToJson, OtlpSpansPbToJsonSafe}
 
 /** SQL surface for the native expressions, so `spark.sql` users get
   * the same operators as the Column API:
@@ -98,9 +98,12 @@ object GraftExtensions {
     "gzip_decompress" -> (
       new ExpressionInfo(classOf[GzipDecompress].getName, "gzip_decompress"),
       (args: Seq[Expression]) => GzipDecompress(args.head)),
-    "otlp_logs_pb_to_json_safe" -> (
-      new ExpressionInfo(classOf[OtlpLogsPbToJsonSafe].getName, "otlp_logs_pb_to_json_safe"),
-      (args: Seq[Expression]) => OtlpLogsPbToJsonSafe(args.head)),
+    "otlp_logs_pb_to_rows" -> (
+      new ExpressionInfo(classOf[OtlpLogsPbToRows].getName, "otlp_logs_pb_to_rows"),
+      (args: Seq[Expression]) => OtlpLogsPbToRows(args.head)),
+    "otlp_logs_pb_to_rows_safe" -> (
+      new ExpressionInfo(classOf[OtlpLogsPbToRowsSafe].getName, "otlp_logs_pb_to_rows_safe"),
+      (args: Seq[Expression]) => OtlpLogsPbToRowsSafe(args.head)),
     "otlp_spans_pb_to_json_safe" -> (
       new ExpressionInfo(classOf[OtlpSpansPbToJsonSafe].getName, "otlp_spans_pb_to_json_safe"),
       (args: Seq[Expression]) => OtlpSpansPbToJsonSafe(args.head)),

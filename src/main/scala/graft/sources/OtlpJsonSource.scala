@@ -87,10 +87,31 @@ object OtlpJsonSource {
       scalarToString(v),
       when(v.getField("arrayValue").isNotNull,
         to_json(transform(v.getField("arrayValue").getField("values"), e => scalarToString(e)))),
-      when(v.getField("kvlistValue").isNotNull,
+      when(v.getField("kvlistValue").isNotNull, {
+        val kvs = firstKeys(v.getField("kvlistValue").getField("values"))
         to_json(map_from_arrays(
-          transform(v.getField("kvlistValue").getField("values"), e => e.getField("key")),
-          transform(v.getField("kvlistValue").getField("values"), e => scalarToString(e.getField("value")))))))
+          transform(kvs, e => e.getField("key")),
+          transform(kvs, e => scalarToString(e.getField("value")))))
+      }))
+
+  /** the key/value structs minus every repeat of an earlier key: a
+    * repeated key keeps its FIRST value (pdata Map.Get) instead of
+    * failing the batch in map_from_arrays with DUPLICATED_MAP_KEY */
+  private def firstKeys(kvs: org.apache.spark.sql.Column) =
+    filter(kvs, (kv, i) =>
+      array_position(transform(kvs, e => e.getField("key")), kv.getField("key")) === i + 1)
+
+  /** OTLP/JSON u64 string → long with the same bits (a fixed64 time at
+    * or above 2^63 reads negative, as the wire decoder gives it);
+    * anything that is not an integer in [-2^63, 2^64) reads null */
+  private def u64Bits(s: org.apache.spark.sql.Column) =
+    coalesce(s.try_cast("long"),
+      (s.try_cast("decimal(20,0)") - lit(new java.math.BigDecimal("18446744073709551616")))
+        .try_cast("long"))
+
+  /** uint32 carried in a long → int with the same low 32 bits */
+  private def uint32Bits(c: org.apache.spark.sql.Column) =
+    shiftright(shiftleft(c, 32), 32).cast("int")
 
   private val logRecordType = StructType(Seq(
     StructField("timeUnixNano", StringType),
@@ -101,8 +122,8 @@ object OtlpJsonSource {
     StructField("attributes", kvType),
     // uint32 on the wire: parse as long so a value with bit 31 set
     // can't make from_json null the ENTIRE request document (silent
-    // loss of every record in it); the output cast to int is a
-    // bit-preserving reinterpretation (flags IS a 32-bit bitfield)
+    // loss of every record in it); the output keeps its low 32 bits
+    // in an int (flags IS a 32-bit bitfield)
     StructField("flags", LongType),
     StructField("droppedAttributesCount", LongType),
     StructField("traceId", StringType),
@@ -119,10 +140,12 @@ object OtlpJsonSource {
   val requestSchema: StructType = StructType(Seq(
     StructField("resourceLogs", ArrayType(resourceLogType))))
 
-  private def kvToMap(c: org.apache.spark.sql.Column) =
+  private def kvToMap(c: org.apache.spark.sql.Column) = {
+    val kvs = firstKeys(c)
     map_from_arrays(
-      transform(c, kv => kv.getField("key")),
-      transform(c, kv => anyValueToString(kv.getField("value"))))
+      transform(kvs, kv => kv.getField("key")),
+      transform(kvs, kv => anyValueToString(kv.getField("value"))))
+  }
 
   /** one JSON request document per input row (`json` column) → one
     * row per log record, OtelModel.logSchema-shaped */
@@ -135,14 +158,14 @@ object OtlpJsonSource {
       .select(col("resource_attributes"), col("sl.scope.name").as("scope_name"),
         explode(col("sl.logRecords")).as("lr"))
       .select(
-        col("lr.timeUnixNano").cast("long").as("time_unix_nano"),
-        col("lr.observedTimeUnixNano").cast("long").as("observed_time_unix_nano"),
+        u64Bits(col("lr.timeUnixNano")).as("time_unix_nano"),
+        u64Bits(col("lr.observedTimeUnixNano")).as("observed_time_unix_nano"),
         col("lr.severityNumber").as("severity_number"),
         col("lr.severityText").as("severity_text"),
         anyValueToString(col("lr.body")).as("body"),
         kvToMap(col("lr.attributes")).as("attributes"),
-        coalesce(col("lr.flags"), lit(0L)).cast("int").as("flags"),
-        coalesce(col("lr.droppedAttributesCount"), lit(0L)).cast("int")
+        uint32Bits(coalesce(col("lr.flags"), lit(0L))).as("flags"),
+        uint32Bits(coalesce(col("lr.droppedAttributesCount"), lit(0L)))
           .as("dropped_attributes_count"),
         col("lr.traceId").as("trace_id"),
         col("lr.spanId").as("span_id"),
@@ -611,23 +634,22 @@ object OtlpJsonSource {
 
   /** OTLP protobuf receiver path: binary ExportLogsServiceRequest
     * rows (`pb` column) → the same flattened log rows as
-    * [[parseLogs]]. The wire blob converts to OTLP/JSON in one native
-    * kernel pass ([[graft.sources.OtlpProtobuf]]), then the JSON
-    * flattening (full AnyValue model) applies unchanged — one
-    * normalization path for both encodings, like the reference
-    * receiver funneling pb and JSON into one pdata model. */
+    * [[parseLogs]], decoded straight from the wire in one native pass
+    * ([[OtlpProtobuf.logsRequestToRows]]) and inlined: one generator
+    * and flat columns, no JSON text in between. The decoder sits in
+    * the generator itself, so no optimizer rule can copy it into a
+    * pushed-down filter and run it twice per request. */
   def parseLogsPb(requests: DataFrame): DataFrame =
-    parseLogs(requests.select(
-      OtlpProtobuf.otlp_logs_pb_to_json(col("pb")).as("json")))
+    requests.select(inline(OtlpProtobuf.otlp_logs_pb_to_rows(col("pb"))))
 
   /** [[parseLogsPb]] with the receiver's dead-letter path: malformed
     * wire bytes route to (raw, dlq_time) rows instead of killing the
-    * batch. Returns (good, dlq). */
+    * batch. Returns (good, dlq): `inline` of the NULL a malformed
+    * request decodes to emits nothing, so the good side needs no
+    * filter, and the DLQ side evaluates the decoder once, in its filter. */
   def parseLogsPbWithDlq(requests: DataFrame): (DataFrame, DataFrame) = {
-    val tagged = requests.withColumn("json",
-      OtlpProtobuf.otlp_logs_pb_to_json_safe(col("pb")))
-    val good = parseLogs(tagged.filter(col("json").isNotNull).select(col("json")))
-    val dlq = tagged.filter(col("json").isNull)
+    val good = requests.select(inline(OtlpProtobuf.otlp_logs_pb_to_rows_safe(col("pb"))))
+    val dlq = requests.filter(OtlpProtobuf.otlp_logs_pb_to_rows_safe(col("pb")).isNull)
       .select(col("pb").as("raw"), current_timestamp().as("dlq_time"))
     (good, dlq)
   }
@@ -860,14 +882,15 @@ object OtlpJsonSource {
     val tagged = spark.readStream
       .format("socket").option("host", host).option("port", port).load()
       .withColumn("pb", try_to_binary(col("value"), lit("base64")))
-      .withColumn("json", OtlpProtobuf.otlp_logs_pb_to_json_safe(col("pb")))
+      .withColumn("rows", OtlpProtobuf.otlp_logs_pb_to_rows_safe(col("pb")))
     tagged.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        // persisted: both sinks read the rows decoded once
         val b = batch.persist()
         try {
-          goodSink(parseLogs(b.filter(col("json").isNotNull).select(col("json"))), batchId)
-          dlqSink(b.filter(col("json").isNull)
+          goodSink(b.select(inline(col("rows"))), batchId)
+          dlqSink(b.filter(col("rows").isNull)
             .select(coalesce(col("pb"), col("value").cast("binary")).as("raw"),
               current_timestamp().as("dlq_time")), batchId)
         } finally { b.unpersist(); () }

@@ -2,24 +2,27 @@ package graft.sources
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** OTLP protobuf wire-format decode for logs — the reference
-  * receiver's PRIMARY encoding (receiver/otlpreceiver; message layout
-  * from the public opentelemetry-proto schema, field numbers verified
-  * against /root/reference/pdata/internal/data/protogen/logs/v1/
-  * logs.pb.go and common/v1/common.pb.go — behavior, not code).
+/** OTLP protobuf wire-format codec — the reference receiver's PRIMARY
+  * encoding (receiver/otlpreceiver; message layout from the public
+  * opentelemetry-proto schema, field numbers per pdata's generated
+  * logs.pb.go / trace.pb.go / metrics.pb.go and common.pb.go —
+  * behavior, not code).
   *
-  * Strategy: a single-pass varint/length-delimited walker converts an
-  * ExportLogsServiceRequest byte blob into the equivalent OTLP/JSON
-  * document, so the existing [[OtlpJsonSource.parseLogs]] flattening
-  * (full AnyValue model included) serves both wire formats — one
-  * normalization path, two encodings, exactly how the collector's
-  * receiver funnels pb and JSON into one pdata model.
+  * Logs decode straight to the flat log rows: [[logsRequestToRows]]
+  * walks an ExportLogsServiceRequest once and emits one row per
+  * LogRecord with the columns, types and canonical AnyValue strings of
+  * [[OtlpJsonSource.parseLogs]], so the pb receivers' plan is one scan,
+  * one generator and flat columns. Spans and metrics still convert to
+  * their OTLP/JSON document ([[spansRequestToJson]],
+  * [[metricsRequestToJson]]) and share the JSON flattening;
+  * [[logsRequestToJson]] keeps the logs form of that conversion.
   *
   * No protobuf library: the wire format is 4 primitives (varint,
   * fixed32/64, length-delimited); a schema-aware reader is ~100 lines
@@ -51,14 +54,19 @@ object OtlpProtobuf {
   def otlp_metrics_json_to_pb(json: Column): Column =
     Bridge.column(OtlpMetricsJsonToPb(Bridge.expression(json)))
 
-  /** Column API: like [[otlp_logs_pb_to_json]] but malformed bytes
+  /** Column API: binary OTLP logs request → array of flat log rows
+    * (`inline` it); malformed bytes fail the task */
+  def otlp_logs_pb_to_rows(pb: Column): Column =
+    Bridge.column(OtlpLogsPbToRows(Bridge.expression(pb)))
+
+  /** Column API: like [[otlp_logs_pb_to_rows]] but malformed bytes
     * yield NULL instead of failing the task — dead-lettering is a
     * per-row decision (receiver error path), one bad file must not
     * kill the batch. */
-  def otlp_logs_pb_to_json_safe(pb: Column): Column =
-    Bridge.column(OtlpLogsPbToJsonSafe(Bridge.expression(pb)))
+  def otlp_logs_pb_to_rows_safe(pb: Column): Column =
+    Bridge.column(OtlpLogsPbToRowsSafe(Bridge.expression(pb)))
 
-  /** nullable twin of [[logsRequestToJson]] for the DLQ path */
+  /** nullable twin of [[logsRequestToJson]]: malformed bytes → null */
   def logsRequestToJsonOrNull(bytes: Array[Byte]): UTF8String =
     try logsRequestToJson(bytes)
     catch { case _: IllegalArgumentException | _: ArrayIndexOutOfBoundsException => null }
@@ -135,12 +143,22 @@ object OtlpProtobuf {
   private def utf8(b: Array[Byte], off: Int, len: Int): String =
     new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8)
 
-  private def hex(b: Array[Byte], off: Int, len: Int): String = {
-    val out = new StringBuilder(len * 2)
+  private val HexDigits = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** lowercase hex of b[off, off+len) as ASCII bytes */
+  private def hexBytes(b: Array[Byte], off: Int, len: Int): Array[Byte] = {
+    val out = new Array[Byte](len * 2)
     var i = 0
-    while (i < len) { out.append(f"${b(off + i) & 0xff}%02x"); i += 1 }
-    out.toString
+    while (i < len) {
+      val v = b(off + i) & 0xff
+      out(2 * i) = HexDigits(v >>> 4); out(2 * i + 1) = HexDigits(v & 0xf)
+      i += 1
+    }
+    out
   }
+
+  private def hex(b: Array[Byte], off: Int, len: Int): String =
+    new String(hexBytes(b, off, len), java.nio.charset.StandardCharsets.US_ASCII)
 
   /** JSON form of a double per the OTLP/JSON mapping: ordinary values
     * are bare numbers; NaN/±Infinity are the quoted string tokens
@@ -1053,10 +1071,283 @@ object OtlpProtobuf {
       resourceEnvelope(b, off, len, "scopeLogs", "logRecords", logRecord))
     UTF8String.fromString(s"""{"resourceLogs":[${rls.mkString(",")}]}""")
   }
+
+  // ---- logs: wire → flat rows -----------------------------------
+  // One walk of the request emits the rows OtlpJsonSource.parseLogs
+  // makes of its OTLP/JSON form: same fields read, same last-wins
+  // rule for repeated scalars, same malformed cases rejected, and
+  // every AnyValue rendered to the canonical string of
+  // OtlpJsonSource.anyValueToString — Double.toString for doubles,
+  // "NaN"/"Infinity", base64 bytes, and the to_json text of arrays and
+  // kvlists, whose own array/kvlist elements render as null (the JSON
+  // schema's depth-1 limit). A duplicated map key keeps its first
+  // value (pdata Map.Get); uint32 fields and fixed64 times keep their
+  // bits in int and long.
+
+  private val attrMapType = MapType(StringType, StringType, valueContainsNull = true)
+
+  /** one flat log row: the columns, order and nullability of
+    * [[OtlpJsonSource.parseLogs]] */
+  val logRowType: StructType = StructType(Seq(
+    StructField("time_unix_nano", LongType),
+    StructField("observed_time_unix_nano", LongType),
+    StructField("severity_number", IntegerType),
+    StructField("severity_text", StringType),
+    StructField("body", StringType),
+    StructField("attributes", attrMapType),
+    StructField("flags", IntegerType, nullable = false),
+    StructField("dropped_attributes_count", IntegerType, nullable = false),
+    StructField("trace_id", StringType),
+    StructField("span_id", StringType),
+    StructField("resource_attributes", attrMapType),
+    StructField("scope_name", StringType)))
+
+  val logRowsType: ArrayType = ArrayType(logRowType, containsNull = false)
+
+  private val ResourceAttrs = 10
+  private val ScopeName = 11
+
+  private val True = UTF8String.fromString("true")
+  private val False = UTF8String.fromString("false")
+  private val EmptyMap: MapData = new ArrayBasedMapData(
+    new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array.empty[Any]))
+
+  /** UTF-8 text: ASCII is used as is; anything else decodes like
+    * [[utf8]], so malformed sequences become U+FFFD as they do on the
+    * JSON path */
+  private def text(b: Array[Byte], off: Int, len: Int): UTF8String = {
+    var i = off
+    while (i < off + len && b(i) >= 0) i += 1
+    if (i == off + len) UTF8String.fromBytes(b, off, len)
+    else UTF8String.fromString(utf8(b, off, len))
+  }
+
+  /** keys in first-occurrence order; a repeated key keeps its first
+    * value */
+  private final class FirstWinsMap {
+    private val m = new java.util.LinkedHashMap[UTF8String, UTF8String]()
+    // not putIfAbsent: that replaces a key whose first value is null
+    def put(k: UTF8String, v: UTF8String): Unit = if (!m.containsKey(k)) m.put(k, v)
+    def toMapData: MapData =
+      if (m.isEmpty) EmptyMap
+      else new ArrayBasedMapData(new GenericArrayData(m.keySet.toArray.asInstanceOf[Array[Any]]),
+        new GenericArrayData(m.values.toArray.asInstanceOf[Array[Any]]))
+    /** to_json of the map */
+    def toJson: UTF8String = json { g =>
+      g.writeStartObject()
+      m.forEach { (k, v) =>
+        g.writeFieldName(k.toString)
+        if (v == null) g.writeNull() else g.writeString(v.toString)
+      }
+      g.writeEndObject()
+    }
+  }
+
+  private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
+
+  /** JSON text written by Jackson's default generator, as to_json does */
+  private def json(write: com.fasterxml.jackson.core.JsonGenerator => Unit): UTF8String = {
+    val w = new java.io.StringWriter()
+    val g = jsonFactory.createGenerator(w)
+    write(g)
+    g.close()
+    UTF8String.fromString(w.toString)
+  }
+
+  /** canonical string of an AnyValue; `element` marks an array or
+    * kvlist member, where an array/kvlist value renders as null (but
+    * is still walked, so malformed nesting fails as on the JSON path) */
+  private def anyValueText(b: Array[Byte], off: Int, len: Int, depth: Int,
+                           element: Boolean): UTF8String = {
+    if (depth > MaxValueDepth) malformed(s"AnyValue nesting deeper than $MaxValueDepth")
+    val r = new Reader(b, off, off + len)
+    var out: UTF8String = null
+    while (r.hasNext) {
+      val tag = r.varint().toInt
+      (tag >>> 3, tag & 7) match {
+        case (1, 2) => val (o, l) = r.lenDelim(); out = text(b, o, l)
+        case (2, 0) => out = if (r.varint() != 0L) True else False
+        case (3, 0) => out = UTF8String.fromString(java.lang.Long.toString(r.varint()))
+        case (4, 1) =>
+          out = UTF8String.fromString(java.lang.Double.toString(
+            java.lang.Double.longBitsToDouble(r.fixed64())))
+        case (5, 2) => val (o, l) = r.lenDelim()
+          val inner = new Reader(b, o, o + l)
+          val vals = new scala.collection.mutable.ArrayBuffer[UTF8String]()
+          while (inner.hasNext) {
+            val t2 = inner.varint().toInt
+            if ((t2 >>> 3) == 1 && (t2 & 7) == 2) {
+              val (vo, vl) = inner.lenDelim()
+              vals += anyValueText(b, vo, vl, depth + 1, element = true)
+            } else inner.skip(t2 & 7)
+          }
+          out = if (element) null else json { g =>
+            g.writeStartArray()
+            vals.foreach(v => if (v == null) g.writeNull() else g.writeString(v.toString))
+            g.writeEndArray()
+          }
+        case (6, 2) => val (o, l) = r.lenDelim()
+          val inner = new Reader(b, o, o + l)
+          val kvs = new FirstWinsMap
+          while (inner.hasNext) {
+            val t2 = inner.varint().toInt
+            if ((t2 >>> 3) == 1 && (t2 & 7) == 2) {
+              val (vo, vl) = inner.lenDelim()
+              keyValueInto(b, vo, vl, depth + 1, element = true, kvs)
+            } else inner.skip(t2 & 7)
+          }
+          out = if (element) null else kvs.toJson
+        case (7, 2) => val (o, l) = r.lenDelim()
+          out = UTF8String.fromBytes(java.util.Base64.getEncoder.encode(
+            java.util.Arrays.copyOfRange(b, o, o + l)))
+        case (_, wt) => r.skip(wt)
+      }
+    }
+    out
+  }
+
+  /** KeyValue: 1=key 2=value, added to `acc` */
+  private def keyValueInto(b: Array[Byte], off: Int, len: Int, depth: Int,
+                           element: Boolean, acc: FirstWinsMap): Unit = {
+    val r = new Reader(b, off, off + len)
+    var key = UTF8String.EMPTY_UTF8
+    var value: UTF8String = null
+    while (r.hasNext) {
+      val tag = r.varint().toInt
+      (tag >>> 3, tag & 7) match {
+        case (1, 2) => val (o, l) = r.lenDelim(); key = text(b, o, l)
+        case (2, 2) => val (o, l) = r.lenDelim()
+          value = anyValueText(b, o, l, depth + 1, element)
+        case (_, wt) => r.skip(wt)
+      }
+    }
+    acc.put(key, value)
+  }
+
+  private def attributeInto(b: Array[Byte], r: Reader, acc: FirstWinsMap): Unit = {
+    val (o, l) = r.lenDelim()
+    keyValueInto(b, o, l, 0, element = false, acc)
+  }
+
+  /** LogRecord (field numbers at [[logRecord]]) → a row in
+    * [[logRowType]] order whose resource and scope columns the
+    * enclosing envelopes fill in */
+  private def logRow(b: Array[Byte], off: Int, len: Int): GenericInternalRow = {
+    val row = new GenericInternalRow(logRowType.length)
+    val attrs = new FirstWinsMap
+    row.setInt(6, 0)
+    row.setInt(7, 0)
+    val r = new Reader(b, off, off + len)
+    while (r.hasNext) {
+      val tag = r.varint().toInt
+      (tag >>> 3, tag & 7) match {
+        case (1, 1)  => row.setLong(0, r.fixed64())
+        case (11, 1) => row.setLong(1, r.fixed64())
+        // a value out of int range is dropped, keeping any earlier one,
+        // as from_json's partial results do
+        case (2, 0)  => val v = r.varint(); if (v == v.toInt) row.setInt(2, v.toInt)
+        case (3, 2)  => val (o, l) = r.lenDelim(); row.update(3, text(b, o, l))
+        case (5, 2)  => val (o, l) = r.lenDelim()
+          row.update(4, anyValueText(b, o, l, 0, element = false))
+        case (6, 2)  => attributeInto(b, r, attrs)
+        case (7, 0)  => row.setInt(7, r.varint().toInt)
+        case (8, 5)  => row.setInt(6, r.fixed32())
+        case (9, 2)  => val (o, l) = r.lenDelim(); row.update(8, UTF8String.fromBytes(hexBytes(b, o, l)))
+        case (10, 2) => val (o, l) = r.lenDelim(); row.update(9, UTF8String.fromBytes(hexBytes(b, o, l)))
+        case (_, wt) => r.skip(wt)
+      }
+    }
+    row.update(5, attrs.toMapData)
+    row
+  }
+
+  /** ScopeLogs: 1=scope 2=logRecords */
+  private def scopeLogRows(b: Array[Byte], off: Int, len: Int,
+                           out: scala.collection.mutable.ArrayBuffer[GenericInternalRow]): Unit = {
+    val first = out.length
+    var name = UTF8String.EMPTY_UTF8
+    val r = new Reader(b, off, off + len)
+    while (r.hasNext) {
+      val tag = r.varint().toInt
+      (tag >>> 3, tag & 7) match {
+        case (1, 2)  => val (o, l) = r.lenDelim(); name = scopeName(b, o, l)
+        case (2, 2)  => val (o, l) = r.lenDelim(); out += logRow(b, o, l)
+        case (_, wt) => r.skip(wt)
+      }
+    }
+    var i = first
+    while (i < out.length) { out(i).update(ScopeName, name); i += 1 }
+  }
+
+  /** InstrumentationScope name (1=name; last wins) */
+  private def scopeName(b: Array[Byte], off: Int, len: Int): UTF8String = {
+    val r = new Reader(b, off, off + len)
+    var name = UTF8String.EMPTY_UTF8
+    while (r.hasNext) {
+      val tag = r.varint().toInt
+      (tag >>> 3, tag & 7) match {
+        case (1, 2)  => val (o, l) = r.lenDelim(); name = text(b, o, l)
+        case (_, wt) => r.skip(wt)
+      }
+    }
+    name
+  }
+
+  /** Resource attributes (1=attributes) */
+  private def resourceAttrs(b: Array[Byte], off: Int, len: Int): MapData = {
+    val r = new Reader(b, off, off + len)
+    val attrs = new FirstWinsMap
+    while (r.hasNext) {
+      val tag = r.varint().toInt
+      (tag >>> 3, tag & 7) match {
+        case (1, 2)  => attributeInto(b, r, attrs)
+        case (_, wt) => r.skip(wt)
+      }
+    }
+    attrs.toMapData
+  }
+
+  /** ResourceLogs: 1=resource 2=scopeLogs */
+  private def resourceLogRows(b: Array[Byte], off: Int, len: Int,
+                              out: scala.collection.mutable.ArrayBuffer[GenericInternalRow]): Unit = {
+    val first = out.length
+    var res = EmptyMap
+    val r = new Reader(b, off, off + len)
+    while (r.hasNext) {
+      val tag = r.varint().toInt
+      (tag >>> 3, tag & 7) match {
+        case (1, 2)  => val (o, l) = r.lenDelim(); res = resourceAttrs(b, o, l)
+        case (2, 2)  => val (o, l) = r.lenDelim(); scopeLogRows(b, o, l, out)
+        case (_, wt) => r.skip(wt)
+      }
+    }
+    var i = first
+    while (i < out.length) { out(i).update(ResourceAttrs, res); i += 1 }
+  }
+
+  /** ExportLogsServiceRequest (1=resourceLogs) → one flat row per
+    * LogRecord ([[logRowType]]) */
+  def logsRequestToRows(bytes: Array[Byte]): ArrayData = {
+    val out = new scala.collection.mutable.ArrayBuffer[GenericInternalRow]()
+    val r = new Reader(bytes, 0, bytes.length)
+    while (r.hasNext) {
+      val tag = r.varint().toInt
+      (tag >>> 3, tag & 7) match {
+        case (1, 2)  => val (o, l) = r.lenDelim(); resourceLogRows(bytes, o, l, out)
+        case (_, wt) => r.skip(wt)
+      }
+    }
+    new GenericArrayData(out.toArray[Any])
+  }
+
+  /** nullable twin of [[logsRequestToRows]] for the DLQ path */
+  def logsRequestToRowsOrNull(bytes: Array[Byte]): ArrayData =
+    try logsRequestToRows(bytes)
+    catch { case _: IllegalArgumentException | _: ArrayIndexOutOfBoundsException => null }
 }
 
-/** binary OTLP ExportLogsServiceRequest → OTLP/JSON string (then
-  * OtlpJsonSource.parseLogs flattens either encoding identically) */
+/** binary OTLP ExportLogsServiceRequest → its OTLP/JSON document (the
+  * pb receivers decode to rows directly with [[OtlpLogsPbToRows]]) */
 case class OtlpLogsPbToJson(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "otlp_logs_pb_to_json"
@@ -1070,29 +1361,44 @@ case class OtlpLogsPbToJson(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): OtlpLogsPbToJson = copy(child = c)
 }
 
-/** [[OtlpLogsPbToJson]] with NULL-on-malformed semantics (DLQ path) */
-case class OtlpLogsPbToJsonSafe(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "otlp_logs_pb_to_json_safe"
+/** binary OTLP ExportLogsServiceRequest → array of flat log rows
+  * ([[OtlpProtobuf.logRowType]]); consumed with `inline` */
+case class OtlpLogsPbToRows(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = OtlpProtobuf.logRowsType
+  override def prettyName: String = "otlp_logs_pb_to_rows"
 
   override def nullSafeEval(input: Any): Any =
-    OtlpProtobuf.logsRequestToJsonOrNull(input.asInstanceOf[Array[Byte]])
+    OtlpProtobuf.logsRequestToRows(input.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.sources.OtlpProtobuf.logsRequestToRows($c)")
+
+  override protected def withNewChildInternal(c: Expression): OtlpLogsPbToRows = copy(child = c)
+}
+
+/** [[OtlpLogsPbToRows]] with NULL-on-malformed semantics (DLQ path) */
+case class OtlpLogsPbToRowsSafe(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = OtlpProtobuf.logRowsType
+  override def nullable: Boolean = true
+  override def prettyName: String = "otlp_logs_pb_to_rows_safe"
+
+  override def nullSafeEval(input: Any): Any =
+    OtlpProtobuf.logsRequestToRowsOrNull(input.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val eval = child.genCode(ctx)
     val code =
       code"""${eval.code}
          |boolean ${ev.isNull} = ${eval.isNull};
-         |UTF8String ${ev.value} = null;
+         |ArrayData ${ev.value} = null;
          |if (!${ev.isNull}) {
-         |  ${ev.value} = graft.sources.OtlpProtobuf.logsRequestToJsonOrNull(${eval.value});
+         |  ${ev.value} = graft.sources.OtlpProtobuf.logsRequestToRowsOrNull(${eval.value});
          |  ${ev.isNull} = ${ev.value} == null;
          |}""".stripMargin
     ev.copy(code = code)
   }
 
-  override protected def withNewChildInternal(c: Expression): OtlpLogsPbToJsonSafe = copy(child = c)
+  override protected def withNewChildInternal(c: Expression): OtlpLogsPbToRowsSafe = copy(child = c)
 }
 
 /** [[OtlpSpansPbToJson]] with NULL-on-malformed semantics (DLQ path) */

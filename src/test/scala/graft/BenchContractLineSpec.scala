@@ -1,0 +1,31 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Bench's last stdout line must parse as JSON whatever the default
+  * locale: a comma-decimal locale once turned "1.500" into "1,500". */
+class BenchContractLineSpec extends AnyFunSuite {
+
+  test("the contract line parses as JSON under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(f"${1.5}%.3f" == "1,500", "the locale under test formats with a comma")
+      val results = Seq(("q1", 1.23456, None), ("q2", 0.5, Some("boom")))
+      val line = Bench.contractLine(
+        sfDir = "/data/sf0.001", results = results, isolated = Seq(("q1", 1.1115, None)),
+        slots = 4, sumOverWall = 3.14159, calibSec = 0.25, calibDrift = 1.0626,
+        calibMemDrift = 1.5, calibAttempts = 2,
+        calibMidJson = s""""calib_mid":${Bench.num3(0.2)},"flag_leg":"none"""",
+        flagged = false, slopeScalars = s""","wall_ratio":${Bench.num3(2.75)}""", wall = 12.5)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      assert(json.get("queries").get("q1").asDouble() == 1.235)
+      assert(json.get("queries").size() == 2 && json.get("isolated").get("q1").asDouble() == 1.112)
+      assert(json.get("sum_over_wall").asDouble() == 3.142)
+      assert(json.get("calib_drift").asDouble() == 1.063)
+      assert(json.get("calib_mem_drift").asDouble() == 1.5)
+      assert(json.get("calib_mid").asDouble() == 0.2 && json.get("wall_ratio").asDouble() == 2.75)
+      assert(json.get("error_count").asInt() == 1 && json.get("value").asDouble() == 12.5)
+    } finally java.util.Locale.setDefault(saved)
+  }
+}

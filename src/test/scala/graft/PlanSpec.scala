@@ -654,4 +654,73 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(bloomFilters >= 1, "no bloom_might_contain Filter in the physical plan")
   }
+
+  /** what the pb log receiver's speed rests on, read off an executed
+    * plan: no JSON parse, no lambda, the wire decoder once per
+    * request, and small generated code per whole-stage subtree */
+  private def pbLogPlanViolations(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, LambdaFunction}
+    import org.apache.spark.sql.execution.LeafExecNode
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.sources.{OtlpLogsPbToJson, OtlpLogsPbToRows, OtlpLogsPbToRowsSafe}
+    df.collect()
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exprs = plan.collect { case p => p.expressions }.flatten.flatMap(_.collect { case e => e })
+    // a file scan only lists its data filters (for file pruning); the
+    // operators above it are what evaluate expressions per row
+    val evaluated = plan.collect { case p if !p.isInstanceOf[LeafExecNode] => p.expressions }
+      .flatten.flatMap(_.collect { case e => e })
+    val decoders = evaluated.count {
+      case _: OtlpLogsPbToRows | _: OtlpLogsPbToRowsSafe | _: OtlpLogsPbToJson => true
+      case _ => false
+    }
+    val codeChars = org.apache.spark.sql.execution.debug.codegenStringSeq(plan).map(_._2.length)
+    Seq(
+      exprs.exists(_.isInstanceOf[JsonToStructs]) -> "JsonToStructs in the plan",
+      exprs.exists(_.isInstanceOf[LambdaFunction]) -> "LambdaFunction in the plan",
+      (decoders != 1) -> s"the decoder appears $decoders times",
+      codeChars.exists(_ > PbLogCodegenMaxChars) ->
+        s"generated source per subtree ${codeChars.mkString(", ")} chars > $PbLogCodegenMaxChars"
+    ).collect { case (true, why) => why }
+  }
+
+  /** the retired JSON chain generated 68k and 163k characters */
+  private val PbLogCodegenMaxChars = 30000
+
+  test("pb log receivers plan one scan, one generator and flat columns, decoding once per request") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.OtlpJsonSource
+    import org.apache.spark.sql.functions.length
+    def spool(files: (String, Array[Byte])*) = {
+      val dir = java.nio.file.Files.createTempDirectory("plan_pb_logs")
+      files.foreach { case (n, b) => java.nio.file.Files.write(dir.resolve(n), b) }
+      spark.read.format("binaryFile").load(dir.toString).select(col("content").as("pb"))
+    }
+    val pb = PbWire.request(Seq("service.name" -> PbWire.str(1, "api")), "graft",
+      PbWire.fixed64(1, 1L) ++ PbWire.vint(2, 9) ++ PbWire.lenDelim(5, PbWire.str(1, "m")) ++
+        PbWire.lenDelim(6, PbWire.kv("k", PbWire.array(PbWire.str(1, "a")))))
+    val goodOnly = spool("r.pb" -> pb)
+    val mixed = spool("r.pb" -> pb, "bad.pb" -> Array[Byte](0x0a, 0x7f, 0x01))
+    val (good, dlq) = OtlpJsonSource.parseLogsPbWithDlq(mixed)
+    def pushed(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("severity_number") >= 9).filter(col("body").isNotNull)
+        .filter(col("resource_attributes").isNotNull)
+    val cases = Seq(
+      "parseLogsPb" -> OtlpJsonSource.parseLogsPb(goodOnly),
+      "parseLogsPb, filtered" -> pushed(OtlpJsonSource.parseLogsPb(goodOnly.filter(length(col("pb")) > 0))),
+      "parseLogsPbWithDlq good" -> good,
+      "parseLogsPbWithDlq good, filtered" -> pushed(good),
+      "parseLogsPbWithDlq dlq" -> dlq,
+      "parseLogsPbWithDlq dlq, filtered" -> dlq.filter(length(col("raw")) > 0))
+    for ((name, df) <- cases) {
+      val v = pbLogPlanViolations(df)
+      assert(v.isEmpty, s"$name: ${v.mkString("; ")}\n${df.queryExecution.executedPlan}")
+    }
+    // the check has teeth: the retired pb → JSON → from_json chain fails it
+    val legacy = pbLogPlanViolations(LegacyPbLogs.parse(goodOnly))
+    assert(legacy.exists(_.contains("JsonToStructs")) && legacy.exists(_.contains("LambdaFunction")), legacy)
+  }
 }
