@@ -178,9 +178,14 @@ object Bench {
     rs.map { case (k, v, _) => s"\"" + k + "\":" + num3(v) }.mkString("{", ",", "}")
 
   /** the LAST stdout line, the contract line consumers json-parse:
-    * the per-query map first, headline scalars last (see main) */
+    * the per-query map first, headline scalars last (see main).
+    * `requestedCpus` is the `local[N]` asked for, `availableCpus` what
+    * the JVM sees; a run with more task threads than cores is
+    * `oversubscribed` and its walls are not comparable to one that is
+    * not. */
   private[graft] def contractLine(sfDir: String, results: Seq[(String, Double, Option[String])],
                                   isolated: Seq[(String, Double, Option[String])], slots: Int,
+                                  requestedCpus: Int, availableCpus: Int,
                                   sumOverWall: Double, calibSec: Double, calibDrift: Double,
                                   calibMemDrift: Double, calibAttempts: Int, calibMidJson: String,
                                   flagged: Boolean, slopeScalars: String, wall: Double): String =
@@ -188,6 +193,8 @@ object Bench {
       s""""queries":${qjsonMs(results)},"isolated":${qjsonMs(isolated)},""" +
       s""""n_queries":${results.size},"error_count":${results.count(_._3.isDefined)},""" +
       s""""isolated_error_count":${isolated.count(_._3.isDefined)},""" +
+      s""""available_cpus":$availableCpus,"requested_cpus":$requestedCpus,""" +
+      s""""oversubscribed":${requestedCpus > availableCpus},""" +
       s""""slots":$slots,"sum_over_wall":${num3(sumOverWall)},""" +
       s""""contended":${sumOverWall > slots * 1.2},""" +
       s""""calib_sec":${num3(calibSec)},"calib_drift":${num3(calibDrift)},""" +
@@ -199,7 +206,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.get(cpus)
     val calibPre = calibrate(spark)
     val calibMemPre = calibrateMem()
     // Queries are independent pipelines; run them in concurrent slots
@@ -477,7 +485,8 @@ object Bench {
           s""""wall_ratio":${num3(slopeWallSfx / wall)},""" +
           s""""sum_over_wall_sfx":${num3(slopeSow)},""" +
           s""""contended_sfx":${slopeSow > slots * 1.2}"""
-    println(contractLine(sfDir, results, isolated, slots, sumOverWall, calibSec, calibDrift,
+    println(contractLine(sfDir, results, isolated, slots, cpus.toInt,
+      Runtime.getRuntime.availableProcessors(), sumOverWall, calibSec, calibDrift,
       calibMemDrift, calibAttempts, calibMidJson, flagged, slopeScalars, wall))
     spark.stop()
     if (results.exists(_._3.isDefined)) {

@@ -701,21 +701,29 @@ object DataPipelineQueries {
       .partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
     val knn = sym.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5).select(col("qid"), col("nid"), col("sim"))
-    // r19 (§2.3/§2.4): an edge is mutual iff BOTH directions survived
-    // their top-5 window — canonicalize (least, greatest) and count
-    // instead of the two-sided (qid,nid)⋈(nid,qid) self-join: ONE
-    // partial-aggregable exchange of (id, id, sim) rows replaces two
-    // join exchanges + sorts over the same data. Both directions of a
-    // pair carry the SAME sim (cosine is symmetric and the union
-    // duplicated one pair row), so min(sim) is that value; (qid, nid)
-    // rows are unique after the window, so count 2 ⇔ mutual.
-    knn.select(least(col("qid"), col("nid")).as("id_a"),
-        greatest(col("qid"), col("nid")).as("id_b"), col("sim"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("__n"), min(col("sim")).as("sim"))
-      .filter(col("__n") === 2)
-      .select(col("id_a"), col("id_b"), col("sim"))
+    mutualPairs(knn)
   }
+
+  /** The canonical-pair aggregate of [[mutualKnnEdges]]: directed
+    * (qid, nid, sim) rows → one (id_a < id_b, sim) row per pair with
+    * BOTH directions present. r19 (§2.3/§2.4): canonicalize (least,
+    * greatest) and aggregate instead of the two-sided (qid,nid)⋈
+    * (nid,qid) self-join — ONE partial-aggregable exchange of
+    * (id, id, sim) rows replaces two join exchanges + sorts. Both
+    * directions of a pair carry the SAME sim (cosine is symmetric and
+    * the union duplicated one pair row), so min(sim) is that value.
+    * Mutual ⇔ min(qid) ≠ max(qid), which, unlike count = 2, holds
+    * only when both directions are there even if a directed row
+    * repeats: a duplicate can never pose as the missing reverse edge
+    * (pinned by DedupAnnSpec). A self-pair is never mutual. */
+  private[graft] def mutualPairs(knn: DataFrame): DataFrame =
+    knn.select(least(col("qid"), col("nid")).as("id_a"),
+        greatest(col("qid"), col("nid")).as("id_b"), col("qid"), col("sim"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(min(col("qid")).as("__q0"), max(col("qid")).as("__q1"),
+        min(col("sim")).as("sim"))
+      .filter(col("__q0") =!= col("__q1"))
+      .select(col("id_a"), col("id_b"), col("sim"))
 
   /** Mutual-kNN degree census over [[mutualKnnEdges]], 0 bucket
     * included */

@@ -459,8 +459,10 @@ object Kernels {
     * gate lazily skips the n=6..10 walks exactly as the SQL IF did.
     * Field semantics:
     *  - dup_line/para_frac: (chunks − distinct chunks) / chunks over
-    *    8-/32-token chunk synthesis (NULL for an empty token array —
-    *    the SQL 0/0; production callers filter size ≥ 1);
+    *    8-/32-token chunk synthesis. An empty token array gives 0.5,
+    *    as the SQL did: its sequence(1, 0) counts down to [1, 0], two
+    *    empty chunks of which one is distinct (production callers
+    *    filter size ≥ 1);
     *  - dup_*_char_frac: duplicated char mass / total chars, 0.0 when
     *    the doc has zero non-separator chars;
     *  - top_{2,3,4}gram_char_frac: max over distinct n-grams of
@@ -486,6 +488,8 @@ object Kernels {
     // distinct-join chars) — join chars include the in-chunk ' '
     // separators (concat_ws), matching length(array_join(l, ''))
     def chunkStats(k: Int): (Long, Long, Long, Long) = {
+      // the SQL's sequence(1, 0) for n = 0: two empty chunks
+      if (n == 0) return (2L, 1L, 0L, 0L)
       val m = (n + k - 1) / k
       val seen = new java.util.HashSet[UTF8String]()
       var joinChars = 0L
@@ -533,10 +537,9 @@ object Kernels {
     def dupHigher(k: Int): Double =
       if (d5 == 0 || tot == 0) 0.0 else overTot(gramStats(k)._2)
     val out = new Array[Any](13)
-    // 0/0 of the empty-array edge is NULL in SQL double division
-    out(0) = if (l8n == 0) null else (l8n - l8d).toDouble / l8n.toDouble
+    out(0) = (l8n - l8d).toDouble / l8n.toDouble
     out(1) = if (l8jc == 0) 0.0 else (l8jc - l8djc).toDouble / l8jc.toDouble
-    out(2) = if (l32n == 0) null else (l32n - l32d).toDouble / l32n.toDouble
+    out(2) = (l32n - l32d).toDouble / l32n.toDouble
     out(3) = if (l32jc == 0) 0.0 else (l32jc - l32djc).toDouble / l32jc.toDouble
     out(4) = overTot(gramStats(2)._1)
     out(5) = overTot(gramStats(3)._1)

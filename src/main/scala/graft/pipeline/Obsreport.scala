@@ -167,8 +167,9 @@ object Obsreport {
     * process_telemetry.go:145-195): the five families a Prometheus
     * scrape of any production collector expects, measured from the
     * JVM's own MX beans (the Go runtime counterparts are documented
-    * per family). Values are read at call time; uptime/cpu are
-    * process-lifetime counters, the rest point-in-time gauges. */
+    * per family), plus graft's Spark codegen compile count. Values are
+    * read at call time; uptime/cpu/compilations are process-lifetime
+    * counters, the rest point-in-time gauges. */
   object ProcessTelemetry {
     private val runtimeMx = java.lang.management.ManagementFactory.getRuntimeMXBean
     private val memoryMx = java.lang.management.ManagementFactory.getMemoryMXBean
@@ -212,6 +213,14 @@ object Obsreport {
       } else totalSysMemoryBytes
     }
 
+    /** classes Spark's code generator has compiled in this JVM
+      * (graft_codegen_compilations, counter): every miss of its
+      * compiled-class cache. A count that keeps climbing while the
+      * same queries repeat means the cache is too small for the
+      * working set (see GraftSession.CodegenCacheEntries). */
+    def codegenCompilations: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
     /** (family, type, unit, value) rows in healthFrame's vocabulary */
     def families(): Seq[(String, String, String, Double)] = Seq(
       ("otelcol_process_uptime", "sum", "s", uptimeSec),
@@ -220,6 +229,7 @@ object Obsreport {
       ("otelcol_process_runtime_total_sys_memory_bytes", "gauge", "By",
         totalSysMemoryBytes.toDouble),
       ("otelcol_process_cpu_seconds", "sum", "s", cpuSeconds),
-      ("otelcol_process_memory_rss", "gauge", "By", rssBytes.toDouble))
+      ("otelcol_process_memory_rss", "gauge", "By", rssBytes.toDouble),
+      ("graft_codegen_compilations", "sum", "1", codegenCompilations.toDouble))
   }
 }

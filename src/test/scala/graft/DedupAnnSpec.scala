@@ -2555,4 +2555,41 @@ class DedupAnnSpec extends AnyFunSuite {
       "no store hit exercised — the probe is vacuous at this SF")
     assert(tNovel > 0, "everything re-served — split degenerate")
   }
+
+  test("mutual-kNN pair aggregate: a duplicated directed edge is deduplicated, never a false mutual edge") {
+    import spark.implicits._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // the count = 2 form this aggregate replaced took one direction
+    // seen twice for both directions
+    def mutual(rows: Seq[(Long, Long, Double)]) =
+      DataPipelineQueries.mutualPairs(rows.toDF("qid", "nid", "sim"))
+        .as[(Long, Long, Double)].collect().toSeq
+    assert(mutual(Seq((1L, 2L, 0.9), (1L, 2L, 0.9))).isEmpty)
+    assert(mutual(Seq((1L, 2L, 0.9), (1L, 2L, 0.9), (2L, 1L, 0.9))) == Seq((1L, 2L, 0.9)))
+    // property: random directed edge sets over 8 ids, self-pairs
+    // included, some rows repeated 1-3 extra times; the cases share
+    // one job, case c's ids offset by 8c. sim is a function of the
+    // unordered pair, as the window's rows carry it.
+    val edge = for (q <- Gen.choose(0L, 7L); n <- Gen.choose(0L, 7L)) yield (q, n)
+    val caseGen = for {
+      es <- Gen.listOfN(12, edge).map(_.distinct)
+      extra <- Gen.listOfN(4, Gen.zip(Gen.choose(0, es.size - 1), Gen.choose(1, 3)))
+    } yield (es, extra.flatMap { case (i, k) => Seq.fill(k)(es(i)) })
+    val cases = (0 until 60).flatMap(i => caseGen.apply(Gen.Parameters.default, Seed(7L + i)))
+    def sim(a: Long, b: Long) = 1.0 / (1 + math.min(a, b) * 16 + math.max(a, b))
+    val (input, expected) = cases.zipWithIndex.map { case ((es, dups), c) =>
+      val off = 8L * c
+      val set = es.toSet
+      val rows = (es ++ dups).map { case (q, n) => (q + off, n + off, sim(q + off, n + off)) }
+      val want = es.collect { case (q, n) if q < n && set((n, q)) =>
+        (q + off, n + off, sim(q + off, n + off)) }
+      (rows, want)
+    }.unzip
+    assert(input.flatten.size > cases.map(_._1.size).sum, "no duplicate was injected")
+    assert(expected.flatten.nonEmpty, "no mutual pair in the sample: the property is vacuous")
+    val got = mutual(input.flatten)
+    assert(got.size == got.distinct.size, "a mutual edge came out twice")
+    assert(got.toSet == expected.flatten.toSet)
+  }
 }

@@ -1033,7 +1033,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val tokGen = Gen.listOf(Gen.frequency(
       (5, Gen.oneOf("a", "bb", "ccc", "dup", "x")),
       (3, word), (1, Gen.oneOf("h\u00e9llo", "\u4e2d\u6587", "\ud83d\ude00")))).map(_.take(80))
-    val cases = samples(tokGen, 120).filter(_.nonEmpty) ++ Seq(
+    val cases = samples(tokGen, 120) ++ Seq(List(),
       List.fill(40)("same"),
       (0 until 40).map(i => s"w${i % 3}").toList,
       List(""), List("one"), (1 to 9).map(_.toString).toList)

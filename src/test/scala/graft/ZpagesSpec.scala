@@ -214,11 +214,18 @@ class ZpagesSpec extends AnyFunSuite {
       assert(rss > 1e6, s"rss $rss implausibly small")
       assert(b1.contains("# TYPE otelcol_process_uptime counter"))
       assert(b1.contains("# TYPE otelcol_process_memory_rss gauge"))
-      // monotone across scrapes: uptime and cpu never go backward
+      // Spark codegen compiles: a lifetime counter, so a cache that
+      // thrashes shows as a count climbing while the queries repeat
+      assert(b1.contains("# TYPE graft_codegen_compilations counter"))
+      val cg1 = sample(b1, "graft_codegen_compilations")
+      // monotone across scrapes: uptime, cpu and compiles never go
+      // backward (a query in between compiles or hits the cache)
       Thread.sleep(20)
+      spark.range(10).selectExpr("id * 3 AS x").filter("x % 2 = 0").count()
       val b2 = scrape()
       assert(sample(b2, "otelcol_process_uptime") >= up1)
       assert(sample(b2, "otelcol_process_cpu_seconds") >= cpu1)
+      assert(sample(b2, "graft_codegen_compilations") >= cg1)
       // ...and the catalog is STABLE across scrapes (lifetime totals,
       // not per-scrape resets)
       assert(sample(b2, """otelcol_exporter_sent_log_records{exporter="parquet"}""") == 15.0)
