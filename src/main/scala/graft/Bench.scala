@@ -189,7 +189,7 @@ object Bench {
                                   sumOverWall: Double, calibSec: Double, calibDrift: Double,
                                   calibMemDrift: Double, calibAttempts: Int, calibMidJson: String,
                                   flagged: Boolean, slopeScalars: String, wall: Double): String =
-    s"""{"metric":"total","unit":"sec","scalars_only":true,"sf":"$sfDir",""" +
+    s"""{"metric":"total","unit":"sec","has_query_map":true,"sf":"$sfDir",""" +
       s""""queries":${qjsonMs(results)},"isolated":${qjsonMs(isolated)},""" +
       s""""n_queries":${results.size},"error_count":${results.count(_._3.isDefined)},""" +
       s""""isolated_error_count":${isolated.count(_._3.isDefined)},""" +
@@ -291,7 +291,7 @@ object Bench {
     // SPARK_GRAFT_SLOPE=0 disables; any other integer is the factor.
     val slopeFactor = sys.env.getOrElse("SPARK_GRAFT_SLOPE", "3").toInt
     var slopeCompact: String = ""
-    // the sfx scalars, hoisted for the final scalars-only line —
+    // the sfx scalars, hoisted for the final contract line —
     // re-parsing slopeCompact with a regex was fragile (a renamed or
     // reformatted field would silently yield "null", recreating the
     // parsed-null failure class; review-wave finding)
@@ -477,7 +477,7 @@ object Bench {
     // structurally empty (per_query: {}, n_common: 0) without them.
     // Field order keeps the big map FIRST and the headline scalars
     // LAST, so any bounded tail-read still ends with the scalars;
-    // every existing field stays byte-compatible, additions only.
+    // "has_query_map":true tells a consumer the maps are on this line.
     val slopeScalars =
       if (slopeFactor < 2 || slopeWallSfx.isNaN) ""
       else

@@ -45,6 +45,13 @@ object GraftSession {
       // static conf, read once per JVM on the first codegen compile;
       // see CodegenCacheEntries
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      // AQE numbers whole-stage codegen stages in the order it creates
+      // them, which varies with stage completion timing (most under
+      // QUtil.inParallel). By default Spark puts that number in the
+      // generated class name, so a cached class compiles again under a
+      // new name (0–20 per warm curation pass, measured). Off, the id
+      // stays in a comment, which the cache key ignores.
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   def get(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")): SparkSession = {
     val s = builder(cpus).getOrCreate()

@@ -59,18 +59,25 @@ object QUtil {
     // java futures, not scala ones: get() rethrows EVERY Throwable
     // (scala Futures only complete on NonFatal, so a fatal worker
     // error — OOM, StackOverflow — would leave the await hanging
-    // forever); on the first failure the pool is shut down hard so
-    // queued thunks don't keep running behind the propagated error
+    // forever). Results drain in completion order, so the first
+    // failure surfaces as soon as it happens, not after every task
+    // submitted before it; the pool is then shut down hard so queued
+    // and running thunks don't keep going behind the propagated error
     try {
-      val futs = work.map(w => pool.submit(
-        new java.util.concurrent.Callable[A] { def call(): A = w() }))
-      futs.map(f =>
-        try f.get()
+      val done = new java.util.concurrent.ExecutorCompletionService[(Int, A)](pool)
+      work.zipWithIndex.foreach { case (w, i) =>
+        done.submit(new java.util.concurrent.Callable[(Int, A)] { def call(): (Int, A) = (i, w()) })
+      }
+      val out = new Array[Any](work.size)
+      work.foreach { _ =>
+        try { val (i, a) = done.take().get(); out(i) = a }
         catch {
           case e: java.util.concurrent.ExecutionException =>
             pool.shutdownNow()
             throw e.getCause
-        })
+        }
+      }
+      out.toSeq.map(_.asInstanceOf[A])
     } finally pool.shutdown()
   }
 

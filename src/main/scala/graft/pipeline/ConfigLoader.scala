@@ -1004,9 +1004,9 @@ object ConfigLoader {
       case "otlp_pb_logs_gz" => OtlpPbGzLogReceiver(str(m, "path"))
       // continuous (readStream) receivers — Service.runStreaming
       case "stream_json_logs" => StreamJsonLogsReceiver(str(m, "path"),
-        m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()).getOrElse(10))
+        m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()))
       case "stream_pb_logs" => StreamPbLogsReceiver(str(m, "path"),
-        m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()).getOrElse(10))
+        m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()))
       // the LIVE OTLP transports as config receivers (the reference's
       // `receivers: otlp: protocols:` block): wire server → spool →
       // streaming pb parse; optional configtls/configauth blocks
@@ -1014,7 +1014,7 @@ object ConfigLoader {
         port = m.get("port").map(_.asInstanceOf[Number].intValue()).getOrElse(4318),
         spoolDir = str(m, "spool"),
         maxFilesPerTrigger =
-          m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()).getOrElse(10),
+          m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()),
         tls = m.get("tls").map(t => graft.sources.Tls.fromMap(asMap(t))),
         auth = m.get("auth").map(a => graft.sources.Auth.serverFromMap(asMap(a))),
         includeMetadata = m.get("include_metadata").exists(_.toString == "true"),
@@ -1025,7 +1025,7 @@ object ConfigLoader {
         port = m.get("port").map(_.asInstanceOf[Number].intValue()).getOrElse(4317),
         spoolDir = str(m, "spool"),
         maxFilesPerTrigger =
-          m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()).getOrElse(10),
+          m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()),
         tls = m.get("tls").map(t => graft.sources.Tls.fromMap(asMap(t))),
         auth = m.get("auth").map(a => graft.sources.Auth.serverFromMap(asMap(a))),
         // confignet: transport tcp (default) | unix with a socket path
@@ -1043,7 +1043,7 @@ object ConfigLoader {
         maxDatagramBytes = m.get("max_datagram_bytes")
           .map(_.asInstanceOf[Number].intValue()).getOrElse(65536),
         maxFilesPerTrigger = m.get("maxFilesPerTrigger")
-          .map(_.asInstanceOf[Number].intValue()).getOrElse(10))
+          .map(_.asInstanceOf[Number].intValue()))
       // Arrow-over-gRPC stream receiver (the otel-arrow transport):
       // ArrowStreamService server → IPC spool → streaming Arrow parse
       case "otlp_arrow" =>
@@ -1054,7 +1054,7 @@ object ConfigLoader {
           port = m.get("port").map(_.asInstanceOf[Number].intValue()).getOrElse(4317),
           spoolDir = str(m, "spool"),
           maxFilesPerTrigger =
-            m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()).getOrElse(10),
+            m.get("maxFilesPerTrigger").map(_.asInstanceOf[Number].intValue()),
           tls = m.get("tls").map(t => graft.sources.Tls.fromMap(asMap(t))),
           auth = m.get("auth").map(a => graft.sources.Auth.serverFromMap(asMap(a))),
           // the receive half of the exporter's delta_dict (batch
@@ -1063,7 +1063,7 @@ object ConfigLoader {
           // configgrpc max_recv_msg_size_mib
           maxRecvMsgBytes = m.get("max_recv_msg_size_mib")
             .map(_.asInstanceOf[Number].longValue() * 1024L * 1024L)
-            .getOrElse(64L * 1024 * 1024),
+            .getOrElse(graft.sources.Spool.MaxRequestBytes),
           admissionBytes = admission.flatMap(_.get("request_limit_mib"))
             .map(_.asInstanceOf[Number].longValue() * 1024L * 1024L),
           admissionWaiters = admission.flatMap(_.get("waiter_limit"))

@@ -45,12 +45,12 @@ object Pipeline {
     * receiver slots into the identical PipelineDef;
     * [[Service.runStreaming]] starts the queries. */
   final case class StreamJsonLogsReceiver(dir: String,
-      maxFilesPerTrigger: Int = 10) extends Receiver {
+      maxFilesPerTrigger: Option[Int] = None) extends Receiver {
     def read(spark: SparkSession): DataFrame =
       graft.sources.OtlpJsonSource.streamLogs(spark, dir, maxFilesPerTrigger)
   }
   final case class StreamPbLogsReceiver(dir: String,
-      maxFilesPerTrigger: Int = 10) extends Receiver {
+      maxFilesPerTrigger: Option[Int] = None) extends Receiver {
     def read(spark: SparkSession): DataFrame =
       graft.sources.OtlpJsonSource.streamLogsPb(spark, dir, maxFilesPerTrigger)
   }
@@ -72,13 +72,12 @@ object Pipeline {
     * distributed half is the streaming read downstream. */
   final case class ScrapeJvmReceiver(spoolDir: String,
       intervalMs: Long = 10000L, timeoutMs: Long = 30000L,
-      maxFilesPerTrigger: Int = 10) extends Receiver with ReceiverLifecycle {
+      maxFilesPerTrigger: Option[Int] = None) extends Receiver with ReceiverLifecycle {
     @transient @volatile private var controller: graft.streaming.Scrape.Controller = _
     def read(spark: SparkSession): DataFrame = {
       new java.io.File(spoolDir).mkdirs()
-      spark.readStream
+      graft.sources.Spool.readStream(spark, maxFilesPerTrigger)
         .schema(graft.model.OtelModel.metricPointSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
         .parquet(spoolDir)
     }
     def start(spark: SparkSession): Unit = synchronized {
@@ -116,7 +115,7 @@ object Pipeline {
     * builders. Port 0 binds ephemerally ([[boundPort]] after start —
     * test/loopback use; a deployment declares the real port). */
   final case class OtlpHttpServerReceiver(port: Int, spoolDir: String,
-      maxFilesPerTrigger: Int = 10,
+      maxFilesPerTrigger: Option[Int] = None,
       tls: Option[graft.sources.TlsConfig] = None,
       auth: Option[graft.sources.Auth.ServerAuthenticator] = None,
       includeMetadata: Boolean = false,
@@ -163,13 +162,13 @@ object Pipeline {
     * nor headers — that is the protocol, not a gap. */
   final case class UdpLinesServerReceiver(port: Int, spoolDir: String,
       transport: ConfigNet.DatagramTransport = ConfigNet.Udp,
-      maxDatagramBytes: Int = 65536, maxFilesPerTrigger: Int = 10)
+      maxDatagramBytes: Int = 65536, maxFilesPerTrigger: Option[Int] = None)
       extends Receiver with ReceiverLifecycle {
     @transient @volatile private var server: graft.sources.UdpLines.Server = _
     def read(spark: SparkSession): DataFrame = {
       val dir = new java.io.File(spoolDir, "lines")
       dir.mkdirs()
-      spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger)
+      graft.sources.Spool.readStream(spark, maxFilesPerTrigger)
         .text(dir.toString)
     }
     def start(spark: SparkSession): Unit = synchronized {
@@ -193,7 +192,7 @@ object Pipeline {
   /** gRPC twin of [[OtlpHttpServerReceiver]] (the collector's primary
     * protocol as a config-declared receiver) */
   final case class OtlpGrpcServerReceiver(port: Int, spoolDir: String,
-      maxFilesPerTrigger: Int = 10,
+      maxFilesPerTrigger: Option[Int] = None,
       tls: Option[graft.sources.TlsConfig] = None,
       auth: Option[graft.sources.Auth.ServerAuthenticator] = None,
       // confignet transport: tcp loopback (default) or unix socket
@@ -228,7 +227,7 @@ object Pipeline {
     * which stream through the Arrow parse path (the `<sig>_arrow`
     * twin of the pb spool receivers) */
   final case class OtlpArrowServerReceiver(port: Int, spoolDir: String,
-      maxFilesPerTrigger: Int = 10,
+      maxFilesPerTrigger: Option[Int] = None,
       tls: Option[graft.sources.TlsConfig] = None,
       auth: Option[graft.sources.Auth.ServerAuthenticator] = None,
       // pair with an exporter's delta_dict: the plan becomes a BATCH
@@ -237,7 +236,7 @@ object Pipeline {
       // file tail cannot serve them; run-once pipelines fit)
       deltaStream: Boolean = false,
       // configgrpc max_recv_msg_size_mib analog, in bytes
-      maxRecvMsgBytes: Long = 64L * 1024 * 1024,
+      maxRecvMsgBytes: Long = graft.sources.Spool.MaxRequestBytes,
       // otel-arrow receiver admission block: bound on received-but-
       // not-yet-durable bytes (+ waiter cap); None = unbounded
       admissionBytes: Option[Long] = None,

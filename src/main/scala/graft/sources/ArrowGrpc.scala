@@ -280,7 +280,7 @@ object ArrowGrpc {
       tls: Option[TlsConfig] = None,
       auth: Option[Auth.ServerAuthenticator] = None,
       onBatchHeaders: Map[String, Seq[String]] => Unit = _ => (),
-      maxRecvMsgBytes: Long = 64L * 1024 * 1024,
+      maxRecvMsgBytes: Long = Spool.MaxRequestBytes,
       // Some(true): serve ONLY delta fragments; Some(false): ONLY
       // self-contained payloads; None: both. The config receiver
       // pins this to its read mode so a mismatched exporter gets a

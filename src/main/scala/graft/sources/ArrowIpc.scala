@@ -627,10 +627,9 @@ object ArrowIpc {
   }
 
   def streamSpoolWithDlq(spark: SparkSession, dir: String, schema: StructType,
-                         maxFilesPerTrigger: Int = 10): (DataFrame, DataFrame) =
-    parseWithDlq(spark.readStream.format("binaryFile")
+                         maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
+    parseWithDlq(Spool.readStream(spark, maxFilesPerTrigger).format("binaryFile")
       .schema(binaryFileSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(dir)
       .select(col("content").as("ipc")), schema)
 
@@ -649,10 +648,9 @@ object ArrowIpc {
     * receive loop minus gRPC framing — each file is one
     * BatchArrowRecords payload) */
   def streamSpool(spark: SparkSession, dir: String, schema: StructType,
-                  maxFilesPerTrigger: Int = 10): DataFrame =
-    parse(spark.readStream.format("binaryFile")
+                  maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    parse(Spool.readStream(spark, maxFilesPerTrigger).format("binaryFile")
       .schema(binaryFileSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(dir)
       .select(col("content").as("ipc")), schema)
 
@@ -811,12 +809,12 @@ object ArrowIpc {
   // ---- per-signal receivers ----------------------------------------
 
   def streamLogsSpool(spark: SparkSession, dir: String,
-                      maxFilesPerTrigger: Int = 10): DataFrame =
+                      maxFilesPerTrigger: Option[Int] = None): DataFrame =
     streamSpool(spark, dir, logsSchema(spark), maxFilesPerTrigger)
   def streamSpansSpool(spark: SparkSession, dir: String,
-                       maxFilesPerTrigger: Int = 10): DataFrame =
+                       maxFilesPerTrigger: Option[Int] = None): DataFrame =
     streamSpool(spark, dir, spansSchema(spark), maxFilesPerTrigger)
   def streamMetricsSpool(spark: SparkSession, dir: String,
-                         maxFilesPerTrigger: Int = 10): DataFrame =
+                         maxFilesPerTrigger: Option[Int] = None): DataFrame =
     streamSpool(spark, dir, metricsSchema(spark), maxFilesPerTrigger)
 }

@@ -69,6 +69,6 @@ object ArrowLogsIpc {
   /** streaming receiver: tail the spool directory (the arrow.go
     * receive loop minus gRPC framing) */
   def streamSpool(spark: SparkSession, dir: String,
-                  maxFilesPerTrigger: Int = 10): DataFrame =
+                  maxFilesPerTrigger: Option[Int] = None): DataFrame =
     ArrowIpc.streamLogsSpool(spark, dir, maxFilesPerTrigger)
 }

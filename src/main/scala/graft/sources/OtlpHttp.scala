@@ -339,7 +339,7 @@ object OtlpHttp {
       partial: (String, Array[Byte]) => Option[(Long, String)] = (_, _) => None,
       controller: Option[graft.pipeline.AdmissionController] = None,
       admissionWaitMs: Long = 1000L,
-      maxDecodedBytes: Long = 64L * 1024 * 1024,
+      maxDecodedBytes: Long = Spool.MaxRequestBytes,
       tls: Option[TlsConfig] = None,
       auth: Option[Auth.ServerAuthenticator] = None,
       onAuthenticated: (String, Map[String, String]) => Unit = (_, _) => (),

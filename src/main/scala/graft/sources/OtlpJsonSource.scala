@@ -801,15 +801,14 @@ object OtlpJsonSource {
   }
 
   private def streamPbFiles(spark: SparkSession, dir: String,
-                            maxFilesPerTrigger: Int): DataFrame =
-    spark.readStream
+                            maxFilesPerTrigger: Option[Int]): DataFrame =
+    Spool.readStream(spark, maxFilesPerTrigger)
       .format("binaryFile")
       .schema(StructType(Seq(  // binaryFile's fixed schema (streaming sources don't infer)
         StructField("path", StringType),
         StructField("modificationTime", TimestampType),
         StructField("length", LongType),
         StructField("content", BinaryType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
       // spool dirs may hold non-payload siblings (IncludeMetadata
       // `.meta` sidecars); only committed request payloads are pb
       .option("pathGlobFilter", "*.pb")
@@ -819,13 +818,13 @@ object OtlpJsonSource {
   /** Streaming OTLP-protobuf file receivers: tail a directory of
     * binary request files (one Export*ServiceRequest per file — the
     * shape an HTTP receiver's spool directory has). */
-  def streamLogsPb(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 10): DataFrame =
+  def streamLogsPb(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame =
     parseLogsPb(streamPbFiles(spark, dir, maxFilesPerTrigger))
 
-  def streamSpansPb(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 10): DataFrame =
+  def streamSpansPb(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame =
     parseSpansPb(streamPbFiles(spark, dir, maxFilesPerTrigger))
 
-  def streamMetricsPb(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 10): DataFrame =
+  def streamMetricsPb(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame =
     parseMetricPointsPb(streamPbFiles(spark, dir, maxFilesPerTrigger))
 
   /** Dead-lettering streaming receivers: one corrupt spool file must
@@ -833,15 +832,15 @@ object OtlpJsonSource {
     * stream (raw bytes + time), well-formed ones parse as usual.
     * Returns (good, dlq); attach a sink to each. */
   def streamLogsPbWithDlq(spark: SparkSession, dir: String,
-                          maxFilesPerTrigger: Int = 10): (DataFrame, DataFrame) =
+                          maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
     parseLogsPbWithDlq(streamPbFiles(spark, dir, maxFilesPerTrigger))
 
   def streamSpansPbWithDlq(spark: SparkSession, dir: String,
-                           maxFilesPerTrigger: Int = 10): (DataFrame, DataFrame) =
+                           maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
     parseSpansPbWithDlq(streamPbFiles(spark, dir, maxFilesPerTrigger))
 
   def streamMetricsPbWithDlq(spark: SparkSession, dir: String,
-                             maxFilesPerTrigger: Int = 10): (DataFrame, DataFrame) =
+                             maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
     parseMetricPointsPbWithDlq(streamPbFiles(spark, dir, maxFilesPerTrigger))
 
   /** Socket-fed OTLP receiver: the reference's primary surface is a
@@ -928,13 +927,14 @@ object OtlpJsonSource {
       .select(unbase64(col("value")).as("pb")))
 
   /** Streaming OTLP-JSON file receiver: tail a directory of request
-    * documents (one JSON per line) with admission control
-    * (maxFilesPerTrigger ≈ the memory limiter's refusal/backpressure
-    * applied at the source).
+    * documents (one JSON per line). Each trigger admits up to one
+    * maximal request's bytes ([[Spool.readStream]]). That bounds a
+    * batch; it is not the memory limiter, whose refusal and
+    * backpressure are the receivers' admission control and
+    * `StreamingPipelines.exportStreamAdmitted`/`exportStreamBytesBudget`.
     */
-  def streamLogs(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 10): DataFrame =
-    parseLogs(spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+  def streamLogs(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    parseLogs(Spool.readStream(spark, maxFilesPerTrigger)
       .text(dir)
       .select(col("value").as("json")))
 

@@ -138,7 +138,7 @@ class AdmissionSpec extends AnyFunSuite {
     val gw = new ArrowIpc.ArrowAdmissionGateway(0, spool, ctl)
     // the streaming receiver tails the gateway's durable spool — the
     // full push path: socket → admission → durable file → micro-batch
-    val q = ArrowIpc.streamSpool(spark, spool, df.schema, maxFilesPerTrigger = 5)
+    val q = ArrowIpc.streamSpool(spark, spool, df.schema, maxFilesPerTrigger = Some(5))
       .writeStream.format("memory").queryName("gw_stream")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_gw_ck").toString)

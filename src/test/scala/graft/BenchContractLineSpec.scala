@@ -27,6 +27,8 @@ class BenchContractLineSpec extends AnyFunSuite {
       assert(json.get("oversubscribed").isBoolean && json.get("oversubscribed").asBoolean())
       val fits = mapper.readTree(line(requested = 4, available = 4))
       assert(fits.get("requested_cpus").asInt() == 4 && !fits.get("oversubscribed").asBoolean())
+      // the line carries the per-query maps and says so
+      assert(json.get("has_query_map").asBoolean() && !json.has("scalars_only"))
       assert(json.get("queries").get("q1").asDouble() == 1.235)
       assert(json.get("queries").size() == 2 && json.get("isolated").get("q1").asDouble() == 1.112)
       assert(json.get("sum_over_wall").asDouble() == 3.142)

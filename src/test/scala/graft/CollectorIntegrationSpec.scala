@@ -468,7 +468,7 @@ class CollectorIntegrationSpec extends AnyFunSuite {
     Files.writeString(java.nio.file.Paths.get(s"$inDir/r1.json"), mkLogRequest("api", 30, 3))
     Files.writeString(java.nio.file.Paths.get(s"$inDir/r2.json"), mkLogRequest("worker", 12, 2))
 
-    val logs = OtlpJsonSource.streamLogs(spark, inDir, maxFilesPerTrigger = 1)
+    val logs = OtlpJsonSource.streamLogs(spark, inDir, maxFilesPerTrigger = Some(1))
     val errors = Processors.filter(logs, col("severity_number") >= 17)
       .withColumn("service", col("resource_attributes").getItem("service.name"))
     val q = errors.writeStream
@@ -1235,7 +1235,7 @@ class CollectorIntegrationSpec extends AnyFunSuite {
     val files = new java.io.File(spoolDir).listFiles().filter(_.getName.endsWith(".arrow"))
     assert(files.length > 1, s"expected a multi-file spool, got ${files.length}")
 
-    val q = graft.sources.ArrowLogsIpc.streamSpool(spark, spoolDir, maxFilesPerTrigger = 2)
+    val q = graft.sources.ArrowLogsIpc.streamSpool(spark, spoolDir, maxFilesPerTrigger = Some(2))
       .writeStream.format("memory").queryName("arrow_logs_out").start()
     try q.processAllAvailable() finally q.stop()
     val got = spark.table("arrow_logs_out")
@@ -1707,7 +1707,7 @@ class CollectorIntegrationSpec extends AnyFunSuite {
     // re-exported dict+zstd as well
     val outDir = java.nio.file.Files.createTempDirectory("arrow_cap_out").toString
     val ck = java.nio.file.Files.createTempDirectory("arrow_cap_ck").toString
-    val processed = ArrowIpc.streamLogsSpool(spark, inDir, maxFilesPerTrigger = 3)
+    val processed = ArrowIpc.streamLogsSpool(spark, inDir, maxFilesPerTrigger = Some(3))
       .filter(col("severity_number") >= 17)
       .withColumn("attributes",
         graft.operators.Processors.mapPut(col("attributes"), "pipeline", lit("errors")))

@@ -150,7 +150,7 @@ class ConfigMergeSpec extends AnyFunSuite {
     assert(rx.maxRecvMsgBytes == 8L * 1024 * 1024)
     assert(rx.admissionBytes.contains(2L * 1024 * 1024))
     assert(rx.admissionWaiters == 5 && rx.admissionWaitMs == 250L)
-    assert(rx.maxFilesPerTrigger == 4 && !rx.deltaStream)
+    assert(rx.maxFilesPerTrigger.contains(4) && !rx.deltaStream)
     val ex = p.exporters.head
       .asInstanceOf[graft.sources.ArrowGrpc.ArrowGrpcStreamExporter]
     assert(ex.numStreams == 3 && ex.maxStreamLifetimeMs == 60000L)

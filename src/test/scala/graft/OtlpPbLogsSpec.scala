@@ -399,7 +399,7 @@ class OtlpPbLogsSpec extends AnyFunSuite {
     val spool = Files.createTempDirectory("pb_dlq_in")
     goodRequests.zipWithIndex.foreach { case (b, i) => Files.write(spool.resolve(s"good$i.pb"), b) }
     Files.write(spool.resolve("bad.pb"), corrupt)
-    val (good, dlq) = OtlpJsonSource.streamLogsPbWithDlq(spark, spool.toString, maxFilesPerTrigger = 2)
+    val (good, dlq) = OtlpJsonSource.streamLogsPbWithDlq(spark, spool.toString, maxFilesPerTrigger = Some(2))
     val gq = good.writeStream.format("memory").queryName("native_dlq_good").start()
     val dq = dlq.writeStream.format("memory").queryName("native_dlq_dead").start()
     try {
