@@ -2,9 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.LocalFs
+
 /** One place for session config so Verify/Bench/tests agree.
   * local[N] testing stands in for a multi-executor cluster; shuffle
   * partitions track core count, AQE handles skew/coalescing at scale.
+  *
+  * Every session serves the `file` scheme with [[LocalFs]], through
+  * both Hadoop entry points (`FileSystem` and `FileContext`), so local
+  * writes start no `chmod`/`readlink` processes (~30 per streaming
+  * micro-batch with Hadoop's stock class and no native library). The
+  * same two keys set in spark-defaults, `--conf` or a system property
+  * are overridden. Hadoop caches one `FileSystem` per scheme and user
+  * for the JVM, so a `FileSystem.get` on `file:` made before the first
+  * session, with a configuration that lacks these settings, keeps the
+  * stock class for the rest of the process.
   */
 object GraftSession {
   /** Entries of Spark's JVM-wide cache of compiled generated classes
@@ -52,6 +64,8 @@ object GraftSession {
       // new name (0–20 per warm curation pass, measured). Off, the id
       // stays in a comment, which the cache key ignores.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Context].getName)
 
   def get(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")): SparkSession = {
     val s = builder(cpus).getOrCreate()

@@ -615,14 +615,9 @@ object ArrowGrpc {
                 java.nio.file.StandardCopyOption.ATOMIC_MOVE,
                 java.nio.file.StandardCopyOption.REPLACE_EXISTING)
             case _ =>
-              val dir = new java.io.File(spoolDir, s"${signal.get}_arrow")
-              dir.mkdirs()
-              val name = f"agrpc-${counter.incrementAndGet()}%08d-" +
-                f"${System.nanoTime()}%x.arrow"
-              val tmp = new java.io.File(dir, s".$name")
-              java.nio.file.Files.write(tmp.toPath, p.record)
-              if (!tmp.renameTo(new java.io.File(dir, name)))
-                throw new java.io.IOException(s"spool rename failed: $name")
+              Spool.commit(new java.io.File(spoolDir, s"${signal.get}_arrow"),
+                f"agrpc-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x.arrow",
+                p.record)
           }
         }
       } finally controller.foreach(_.release(totalBytes))

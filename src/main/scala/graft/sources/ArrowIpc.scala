@@ -764,13 +764,8 @@ object ArrowIpc {
             }
             if (admitted)
               try {
-                val dir = new java.io.File(spoolDir); dir.mkdirs()
-                val name = f"gw-${counter.incrementAndGet()}%08d-" +
-                  f"${System.nanoTime()}%x.arrow"
-                val tmp = new java.io.File(dir, s".$name")
-                java.nio.file.Files.write(tmp.toPath, bytes)
-                if (!tmp.renameTo(new java.io.File(dir, name)))
-                  throw new java.io.IOException(s"gateway rename failed: $name")
+                Spool.commit(new java.io.File(spoolDir),
+                  f"gw-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x.arrow", bytes)
                 payloads.incrementAndGet()
               } finally admission.release(bytes.length.toLong)
           }

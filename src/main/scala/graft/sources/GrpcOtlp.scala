@@ -736,13 +736,8 @@ object GrpcOtlp {
         case None => ()
       }
       try {
-        val dir = new java.io.File(spoolDir, s"${signal.get}_pb")
-        dir.mkdirs()
-        val name = f"grpc-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x.pb"
-        val tmp = new java.io.File(dir, s".$name")
-        java.nio.file.Files.write(tmp.toPath, body)
-        if (!tmp.renameTo(new java.io.File(dir, name)))
-          throw new java.io.IOException(s"spool rename failed: $name")
+        Spool.commit(new java.io.File(spoolDir, s"${signal.get}_pb"),
+          f"grpc-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x.pb", body)
       } finally controller.foreach(_.release(body.length.toLong))
       obs.requests.incrementAndGet()
       // netstats: framed length is the wire axis, decoded the logical

@@ -539,13 +539,9 @@ object OtlpHttp {
         try {
           val sub = if (isPb) s"${signal.get}_pb" else s"${signal.get}_json"
           val dir = new java.io.File(spoolDir, sub)
-          dir.mkdirs()
           val name = f"req-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x" +
             (if (isPb) ".pb" else ".json")
-          val tmp = new java.io.File(dir, s".$name")
-          java.nio.file.Files.write(tmp.toPath, body)
-          if (!tmp.renameTo(new java.io.File(dir, name)))
-            throw new java.io.IOException(s"spool rename failed: $name")
+          Spool.commit(dir, name, body)
           // IncludeMetadata: request headers → durable client-metadata
           // sidecar, AFTER the payload commits (a sidecar never
           // exists without its request; a crash in between degrades

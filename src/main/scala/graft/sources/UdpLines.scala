@@ -66,13 +66,9 @@ object UdpLines {
               .map(_.stripSuffix("\r")).filter(_.nonEmpty)
             if (ls.nonEmpty) {
               obs.lines.addAndGet(ls.length.toLong)
-              val name =
-                f"dgram-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x.txt"
-              val tmp = new java.io.File(dir, s".$name")
-              java.nio.file.Files.write(tmp.toPath,
+              Spool.commit(dir,
+                f"dgram-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x.txt",
                 ls.mkString("\n").getBytes(UTF_8))
-              if (!tmp.renameTo(new java.io.File(dir, name)))
-                throw new java.io.IOException(s"spool rename failed: $name")
             }
           }
         } catch {
