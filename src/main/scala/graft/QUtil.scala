@@ -19,14 +19,6 @@ object QUtil {
   /** order-independent exact sum of a double expression */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 8))).cast("double")
 
-  /** epoch minute bucket as BIGINT from bigint nanos (integral math;
-    * DuckDB twin: epoch_ns(ts) // 60000000000)
-    */
-  def nsMinute(tsNs: Column): Column = expr(s"${tsNs.toString} DIV 60000000000").cast("bigint")
-
-  /** epoch hour bucket as BIGINT from bigint nanos */
-  def nsHour(tsNs: Column): Column = expr(s"${tsNs.toString} DIV 3600000000000").cast("bigint")
-
   /** Bounded pool for overlapping INDEPENDENT Spark actions inside
     * one operator (optimization guide §2.6: actions are only
     * sequential because the driver calls them sequentially; a second

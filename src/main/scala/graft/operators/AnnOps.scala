@@ -145,20 +145,6 @@ object AnnOps {
           .otherwise("clean").as("severity"))
   }
 
-  /** random-hyperplane signature: bit p = sign(Σ_d w_pd · v_d) with
-    * deterministic pseudo-random ±1 weights from xxhash64(table, p, d).
-    * One codegen'd pass per vector.
-    */
-  def hyperplaneSig(vec: Column, planes: Int, table: Int = 0): Column =
-    transform(sequence(lit(0), lit(planes - 1)), p => {
-      val s = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1), (v, d) =>
-          when(xxhash64(concat(lit(table), lit("/"), p.cast("string"),
-            lit(":"), d.cast("string"))) > 0, v).otherwise(-v)),
-        lit(0.0), (acc, x) => acc + x)
-      when(s > 0, lit(1)).otherwise(lit(0))
-    })
-
   /** IVF (inverted-file) ANN index: partition the corpus into `c`
     * centroid cells (deterministic Lloyd iterations, cosine metric),
     * probe the `nprobe` nearest cells per query, exact re-rank inside.

@@ -157,31 +157,24 @@ object Ottl {
   def splitStr(c: Column, sep: String): Column = split(c, java.util.regex.Pattern.quote(sep))
   /** Substring(str, start, len) — OTTL is 0-based, Spark 1-based */
   def substringOttl(c: Column, start: Int, len: Int): Column = substring(c, start + 1, len)
-  /** Int(v) / Double(v) / String(v) */
+  /** Int(v) / Double(v) */
   def toInt(c: Column): Column = c.cast("long")
   def toDouble(c: Column): Column = c.cast("double")
-  def toStringOttl(c: Column): Column = c.cast("string")
   /** IsMatch(str, regex) */
   def isMatch(c: Column, regex: String): Column = c.rlike(regex)
-  /** SHA256/SHA1/MD5/FNV */
+  /** SHA256/FNV */
   def sha256Of(c: Column): Column = sha2(c, 256)
-  def sha1Of(c: Column): Column = sha1(c)
-  def md5Of(c: Column): Column = md5(c)
   /** real FNV-1a 64 (spec constants), matching OTTL's FNV converter */
   def fnvOf(c: Column): Column = graft.functions.HashExprs.fnv_hash(c.cast("string"))
-  /** TraceID/SpanID hex strings */
-  def spanIdHex(c: Column): Column = lower(hex(c))
   /** ParseJSON(str)[path] */
   def parseJsonField(c: Column, path: String): Column = get_json_object(c, s"$$.$path")
   /** ConvertCase(str, "upper"|"lower") */
   def convertCase(c: Column, mode: String): Column =
     if (mode == "upper") upper(c) else lower(c)
-  /** Trim / Len */
-  def trimOttl(c: Column): Column = trim(c)
+  /** Len */
   def len(c: Column): Column = length(c)
-  /** UnixNano→seconds and back (OTTL Time conversions on integral ns) */
+  /** UnixNano→seconds (OTTL Time conversion on integral ns) */
   def nanosToSeconds(c: Column): Column = c.cast("long") / lit(1000000000L)
-  def secondsToNanos(c: Column): Column = (c.cast("double") * 1e9).cast("long")
   /** Coalesce-style default */
   def default(c: Column, dflt: Column): Column = coalesce(c, dflt)
   /** ExtractPatterns(str, regex-with-groups) → map of named captures */

@@ -53,7 +53,7 @@ import org.apache.spark.sql.types.StructType
 object ArrowGrpc {
   import GrpcOtlp.{H2, Hpack, Status}
 
-  // ---- arrowpb codec (hand-rolled like OtlpProtobuf) ---------------
+  // ---- arrowpb codec (through OtlpProtobuf's wire codec) ----------
 
   /** ArrowPayloadType values for the three OTLP signals (the proto
     * spaces signal families a decade apart; related-data types in
@@ -83,92 +83,53 @@ object ArrowGrpc {
   final case class BatchStatus(batchId: Long, statusCode: Int,
                                statusMessage: String)
 
-  private def varint(v0: Long): Array[Byte] = {
-    var v = v0
-    val out = scala.collection.mutable.ArrayBuffer[Byte]()
-    while ((v & ~0x7FL) != 0L) { out += ((v & 0x7F) | 0x80).toByte; v >>>= 7 }
-    out += (v & 0x7F).toByte
-    out.toArray
-  }
-  private def lenDelim(field: Int, body: Array[Byte]): Array[Byte] =
-    varint((field << 3) | 2L) ++ varint(body.length.toLong) ++ body
-  private def varintField(field: Int, v: Long): Array[Byte] =
-    if (v == 0L) Array.empty else varint((field << 3).toLong) ++ varint(v)
-
-  def encodeBatch(b: BatchArrowRecords): Array[Byte] = {
-    val payloads = b.payloads.flatMap { p =>
-      lenDelim(2, varintField(2, p.tpe.toLong) ++
-        lenDelim(1, p.schemaId.getBytes("UTF-8")) ++
-        lenDelim(3, p.record)).toSeq
-    }.toArray
-    varintField(1, b.batchId) ++ payloads ++
-      (if (b.headers.nonEmpty) lenDelim(3, b.headers) else Array.empty[Byte])
+  def encodeBatch(b: BatchArrowRecords): Array[Byte] = OtlpProtobuf.encode { w =>
+    if (b.batchId != 0L) w.vint(1, b.batchId)
+    b.payloads.foreach { p =>
+      w.lenDelim(2, OtlpProtobuf.encode { pw =>
+        if (p.tpe != 0) pw.vint(2, p.tpe.toLong)
+        pw.str(1, p.schemaId)
+        pw.lenDelim(3, p.record)
+      })
+    }
+    if (b.headers.nonEmpty) w.lenDelim(3, b.headers)
   }
 
-  def encodeStatus(s: BatchStatus): Array[Byte] =
-    varintField(1, s.batchId) ++ varintField(2, s.statusCode.toLong) ++
-      (if (s.statusMessage.nonEmpty)
-        lenDelim(3, s.statusMessage.getBytes("UTF-8"))
-      else Array.empty[Byte])
+  def encodeStatus(s: BatchStatus): Array[Byte] = OtlpProtobuf.encode { w =>
+    if (s.batchId != 0L) w.vint(1, s.batchId)
+    if (s.statusCode != 0) w.vint(2, s.statusCode.toLong)
+    if (s.statusMessage.nonEmpty) w.str(3, s.statusMessage)
+  }
 
-  private final class PbReader(body: Array[Byte], var p: Int, val end: Int) {
-    def hasMore: Boolean = p < end
-    def readVarint(): Long = {
-      var shift = 0; var v = 0L; var b = 0
-      do { b = body(p) & 0xFF; p += 1; v |= (b & 0x7FL) << shift; shift += 7 }
-      while ((b & 0x80) != 0)
-      v
-    }
-    /** a length must be a sane forward distance — a negative or
-      * overflowing varint would walk p BACKWARDS and loop forever */
-    def readLen(): Int = {
-      val len = readVarint()
-      require(len >= 0 && len <= end - p, s"bad length $len at $p")
-      len.toInt
-    }
-    def readBytes(): Array[Byte] = {
-      val len = readLen()
-      val out = java.util.Arrays.copyOfRange(body, p, p + len)
-      p += len
-      out
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => readVarint(); ()
-      case 1 => p += 8
-      case 2 => p += readLen()
-      case 5 => p += 4
-      case _ => throw new IllegalArgumentException(s"bad wire type $wire")
-    }
+  private def bytesField(r: OtlpProtobuf.Reader): Array[Byte] = {
+    val (o, l) = r.lenDelim()
+    java.util.Arrays.copyOfRange(r.b, o, o + l)
   }
 
   def decodeBatch(body: Array[Byte]): BatchArrowRecords = {
-    val r = new PbReader(body, 0, body.length)
+    val r = new OtlpProtobuf.Reader(body, 0, body.length)
     var batchId = 0L
     val payloads = scala.collection.mutable.ArrayBuffer[ArrowPayload]()
     var headers = Array.empty[Byte]
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val field = (tag >> 3).toInt; val wire = (tag & 7).toInt
-      (field, wire) match {
-        case (1, 0) => batchId = r.readVarint()
+    while (r.hasNext) {
+      val tag = r.varint()
+      ((tag >>> 3).toInt, (tag & 7).toInt) match {
+        case (1, 0) => batchId = r.varint()
         case (2, 2) =>
-          // read the length varint FIRST — it advances r.p, so the
-          // end offset must be computed after (the p-advance clobber
-          // class the r9 pb fix covered)
-          val len = r.readLen()
-          val end2 = r.p + len
+          val (o, l) = r.lenDelim()
+          val pr = new OtlpProtobuf.Reader(body, o, o + l)
           var schemaId = ""; var tpe = 0; var record = Array.empty[Byte]
-          while (r.p < end2) {
-            val t2 = r.readVarint()
-            ((t2 >> 3).toInt, (t2 & 7).toInt) match {
-              case (1, 2) => schemaId = new String(r.readBytes(), "UTF-8")
-              case (2, 0) => tpe = r.readVarint().toInt
-              case (3, 2) => record = r.readBytes()
-              case (_, w) => r.skip(w)
+          while (pr.hasNext) {
+            val t2 = pr.varint()
+            ((t2 >>> 3).toInt, (t2 & 7).toInt) match {
+              case (1, 2) => schemaId = new String(bytesField(pr), "UTF-8")
+              case (2, 0) => tpe = pr.varint().toInt
+              case (3, 2) => record = bytesField(pr)
+              case (_, w) => pr.skip(w)
             }
           }
           payloads += ArrowPayload(schemaId, tpe, record)
-        case (3, 2) => headers = r.readBytes()
+        case (3, 2) => headers = bytesField(r)
         case (_, w) => r.skip(w)
       }
     }
@@ -176,14 +137,14 @@ object ArrowGrpc {
   }
 
   def decodeStatus(body: Array[Byte]): BatchStatus = {
-    val r = new PbReader(body, 0, body.length)
+    val r = new OtlpProtobuf.Reader(body, 0, body.length)
     var batchId = 0L; var code = 0; var msg = ""
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      ((tag >> 3).toInt, (tag & 7).toInt) match {
-        case (1, 0) => batchId = r.readVarint()
-        case (2, 0) => code = r.readVarint().toInt
-        case (3, 2) => msg = new String(r.readBytes(), "UTF-8")
+    while (r.hasNext) {
+      val tag = r.varint()
+      ((tag >>> 3).toInt, (tag & 7).toInt) match {
+        case (1, 0) => batchId = r.varint()
+        case (2, 0) => code = r.varint().toInt
+        case (3, 2) => msg = new String(bytesField(r), "UTF-8")
         case (_, w) => r.skip(w)
       }
     }
@@ -289,23 +250,10 @@ object ArrowGrpc {
       expectDelta: Option[Boolean] = None) {
     val obs = new ArrowGrpcObs
     private val counter = new java.util.concurrent.atomic.AtomicLong
-    private val server: java.net.ServerSocket = tls match {
-      case None => new java.net.ServerSocket(
-        port, 50, java.net.InetAddress.getLoopbackAddress)
-      case Some(cfg) =>
-        val ss = cfg.sslContext().getServerSocketFactory
-          .createServerSocket(port, 50,
-            java.net.InetAddress.getLoopbackAddress)
-          .asInstanceOf[javax.net.ssl.SSLServerSocket]
-        ss.setSSLParameters(cfg.serverParameters(ss.getSSLParameters))
-        ss
-    }
-    @volatile private var running = true
 
-    private final class StreamState {
+    private final class StreamState(val id: Int, val out: java.io.OutputStream)
+        extends H2.ServerStream {
       var headers: Map[String, String] = Map.empty
-      var headerBlock = new java.io.ByteArrayOutputStream()
-      var headersDone = false
       var responded = false // response HEADERS sent → errors go via trailers
       // trailers sent (stream-breaking error): anything the client
       // still has in flight is dropped, never processed or acked
@@ -314,194 +262,102 @@ object ArrowGrpc {
       // per-batch metadata headers get their OWN hpack decoder, like
       // the reference headerReceiver (arrow.go:120-139)
       val batchHeaderDecoder = new Hpack.Decoder
+      def fail(status: Int, msg: String): Unit = {
+        H2.trailers(out, id, status, msg, trailersOnly = false)
+        dead = true
+      }
+      def onHeaders(hs: Map[String, String]): Boolean = {
+        headers ++= hs
+        openStream(this)
+      }
+      def onData(payload: Array[Byte]): Unit = if (!dead) {
+        buf.write(payload)
+        if (responded) drainMessages(this)
+      }
+      /** client half-closed: OK trailers — the graceful EOS of the
+        * exporter's max_stream_lifetime rollover */
+      def onEnd(): Unit =
+        if (responded && !dead) H2.trailers(out, id, Status.Ok, "", trailersOnly = false)
     }
 
-    private def handle(sock: java.net.Socket): Unit = {
-      val in = new java.io.BufferedInputStream(sock.getInputStream)
-      val out = new java.io.BufferedOutputStream(sock.getOutputStream)
-      val decoder = new Hpack.Decoder
-      val streams = scala.collection.mutable.HashMap[Int, StreamState]()
-      try {
-        H2.handshakeServer(in, out)
-        var open = true
-        while (open) {
-          val f = H2.read(in)
-          if (f == null) open = false
-          else f.tpe match {
-            case H2.SETTINGS =>
-              if ((f.flags & H2.FlagAck) == 0)
-                H2.write(out, H2.SETTINGS, H2.FlagAck, 0, Array.empty)
-              out.flush()
-            case H2.PING =>
-              if ((f.flags & H2.FlagAck) == 0) {
-                H2.write(out, H2.PING, H2.FlagAck, 0, f.payload); out.flush()
-              }
-            case H2.WINDOW_UPDATE => ()
-            case H2.GOAWAY => open = false
-            case H2.RST_STREAM => streams.remove(f.streamId)
-            case H2.HEADERS | H2.CONTINUATION =>
-              val st = streams.getOrElseUpdate(f.streamId, new StreamState)
-              st.headerBlock.write(H2.headerFields(f.tpe, f.flags, f.payload))
-              if ((f.flags & H2.FlagEndHeaders) != 0) {
-                st.headers = st.headers ++
-                  decoder.decode(st.headerBlock.toByteArray).toMap
-                st.headerBlock = new java.io.ByteArrayOutputStream()
-                st.headersDone = true
-                openStream(out, f.streamId, st, streams)
-              }
-              if ((f.flags & H2.FlagEndStream) != 0 && streams.contains(f.streamId))
-                finishStream(out, f.streamId, streams)
-            case H2.DATA =>
-              // flow-control replenishment (RFC 9113 §5.2) FIRST —
-              // the frame is consumed into the stream buffer the
-              // moment it arrives, so the grant precedes the ack.
-              // Unary exchanges never exhaust the big initial window,
-              // but this receiver's streams are LONG-LIVED — a
-              // conformant peer that respects flow control would
-              // stall for good once cumulative DATA passes the
-              // initial window if nothing ever re-opens it.
-              if (f.payload.nonEmpty) {
-                val inc = Array[Byte](
-                  ((f.payload.length >> 24) & 0x7F).toByte,
-                  ((f.payload.length >> 16) & 0xFF).toByte,
-                  ((f.payload.length >> 8) & 0xFF).toByte,
-                  (f.payload.length & 0xFF).toByte)
-                H2.write(out, H2.WINDOW_UPDATE, 0, 0, inc)
-                if (streams.contains(f.streamId))
-                  H2.write(out, H2.WINDOW_UPDATE, 0, f.streamId, inc)
-                out.flush()
-              }
-              streams.get(f.streamId).foreach { st =>
-                if (!st.dead) {
-                  st.buf.write(f.payload)
-                  if (st.responded) drainMessages(out, f.streamId, st)
-                }
-                if ((f.flags & H2.FlagEndStream) != 0)
-                  finishStream(out, f.streamId, streams)
-              }
-            case _ => ()
-          }
-        }
-      } catch {
-        case _: java.io.IOException if !running => ()
-        case scala.util.control.NonFatal(_) => ()
-      } finally sock.close()
-    }
-
-    private def trailersOnly(out: java.io.OutputStream, streamId: Int,
-                             status: Int, msg: String): Unit = {
-      H2.write(out, H2.HEADERS, H2.FlagEndHeaders | H2.FlagEndStream,
-        streamId, Hpack.encode(Seq(":status" -> "200",
-          "content-type" -> "application/grpc",
-          "grpc-status" -> status.toString, "grpc-message" -> msg)))
-      out.flush()
-    }
-    private def trailers(out: java.io.OutputStream, streamId: Int,
-                         status: Int, msg: String): Unit = {
-      val hs = Seq("grpc-status" -> status.toString) ++
-        (if (msg.nonEmpty) Seq("grpc-message" -> msg) else Nil)
-      H2.write(out, H2.HEADERS, H2.FlagEndHeaders | H2.FlagEndStream,
-        streamId, Hpack.encode(hs))
-      out.flush()
-    }
+    private val server = new H2.Server(graft.pipeline.ConfigNet.Tcp, port, tls,
+      "arrow-grpc", new StreamState(_, _))
 
     /** validate the request headers and send response HEADERS — the
-      * stream is then live for any number of batches */
-    private def openStream(out: java.io.OutputStream, streamId: Int,
-        st: StreamState,
-        streams: scala.collection.mutable.HashMap[Int, StreamState]): Unit = {
-      if (st.responded) return
+      * stream is then live for any number of batches; false = refused */
+    private def openStream(st: StreamState): Boolean = {
+      if (st.responded) return true
       val path = st.headers.getOrElse(":path", "")
-      if (st.headers.getOrElse(":method", "") != "POST" ||
-          !arrowPaths.contains(path)) {
-        // the downgrade trigger: a plain-OTLP peer answers the
-        // Arrow service with Unimplemented (stream.go:175-182)
-        streams.remove(streamId)
-        trailersOnly(out, streamId, Status.Unimplemented,
-          s"unknown method $path")
-        return
+      val refusal: Option[(Int, String)] =
+        if (st.headers.getOrElse(":method", "") != "POST" || !arrowPaths.contains(path))
+          // the downgrade trigger: a plain-OTLP peer answers the
+          // Arrow service with Unimplemented (stream.go:175-182)
+          Some((Status.Unimplemented, s"unknown method $path"))
+        else if (!st.headers.getOrElse("content-type", "").startsWith("application/grpc"))
+          Some((Status.Internal, "content-type must be application/grpc"))
+        else auth.flatMap(_.authenticate(st.headers.map { case (k, v) => k -> Seq(v) })
+          .left.toOption).map(reason => (Status.Unauthenticated, reason))
+      refusal match {
+        case Some((status, msg)) =>
+          H2.trailers(st.out, st.id, status, msg, trailersOnly = true)
+          false
+        case None =>
+          obs.streams.incrementAndGet()
+          H2.responseHeaders(st.out, st.id)
+          st.out.flush()
+          st.responded = true
+          drainMessages(st)
+          true
       }
-      if (!st.headers.getOrElse("content-type", "").startsWith("application/grpc")) {
-        streams.remove(streamId)
-        trailersOnly(out, streamId, Status.Internal,
-          "content-type must be application/grpc")
-        return
-      }
-      val denied: Option[String] = auth.flatMap(
-        _.authenticate(st.headers.map { case (k, v) => k -> Seq(v) })
-          .left.toOption)
-      if (denied.isDefined) {
-        streams.remove(streamId)
-        trailersOnly(out, streamId, Status.Unauthenticated, denied.get)
-        return
-      }
-      obs.streams.incrementAndGet()
-      H2.write(out, H2.HEADERS, H2.FlagEndHeaders, streamId, Hpack.encode(
-        Seq(":status" -> "200", "content-type" -> "application/grpc")))
-      out.flush()
-      st.responded = true
-      drainMessages(out, streamId, st)
     }
 
     /** consume every COMPLETE gRPC message buffered so far; each one
       * is a BatchArrowRecords → durable spool → BatchStatus ack */
-    private def drainMessages(out: java.io.OutputStream, streamId: Int,
-                              st: StreamState): Unit = {
-      var bytes = st.buf.toByteArray
+    private def drainMessages(st: StreamState): Unit = {
+      val bytes = st.buf.toByteArray
       var consumed = 0
-      var go = true
-      while (go && bytes.length - consumed >= 5) {
-        val base = consumed
-        val compressed = bytes(base) != 0
-        // UNSIGNED 32-bit length: a high-bit prefix must hit the size
-        // gate as the huge number it claims to be, not wrap negative
-        // and sneak past both checks into an array-bounds crash
-        val mlen = ((bytes(base + 1) & 0xFFL) << 24) | ((bytes(base + 2) & 0xFFL) << 16) |
-          ((bytes(base + 3) & 0xFFL) << 8) | (bytes(base + 4) & 0xFFL)
-        if (mlen > maxRecvMsgBytes) {
-          // without a decodable batch_id there is nothing to ack —
-          // this is the transport-level failure that DOES break the
-          // stream (gRPC's own max_recv_msg_size behavior)
-          trailers(out, streamId, Status.ResourceExhausted,
-            s"received message larger than max ($mlen vs $maxRecvMsgBytes)")
-          st.dead = true
-          st.buf.reset()
-          return
-        }
-        if (bytes.length - base - 5 < mlen) go = false
-        else {
-          val framed = java.util.Arrays.copyOfRange(
-            bytes, base + 5, base + 5 + mlen.toInt)
-          consumed = base + 5 + mlen.toInt
-          // gzip|snappy|zstd, the reference's negotiated codec set
-          // (configgrpc.go:385-391). A failure here is a per-STREAM
-          // error answered with trailers, NEVER a thrown exception —
-          // that would unwind into the connection catch-all and
-          // silently reset every sibling stream on this connection
-          val enc = st.headers.getOrElse("grpc-encoding", "identity")
-          val body =
-            if (!compressed) framed
-            else if (!GrpcOtlp.GrpcCodecs(enc)) {
-              trailers(out, streamId, Status.Unimplemented,
-                s"grpc: Decompressor is not installed for grpc-encoding \"$enc\"")
-              st.dead = true; st.buf.reset(); return
-            } else try OtlpHttp.Codec.decode(enc, framed)
-            catch {
-              case scala.util.control.NonFatal(_) =>
-                trailers(out, streamId, Status.Internal, s"corrupt $enc message")
-                st.dead = true; st.buf.reset(); return
-            }
-          processBatch(out, streamId, st, body, wireBytes = mlen.toLong)
-          if (st.dead) { st.buf.reset(); return }
+      var more = true
+      while (more && !st.dead) {
+        val msg =
+          try H2.grpcMessage(bytes, consumed, bytes.length, maxRecvMsgBytes)
+          catch {
+            case e: H2.MessageTooLarge =>
+              // without a decodable batch_id there is nothing to ack —
+              // this is the transport-level failure that DOES break
+              // the stream (gRPC's own max_recv_msg_size behavior)
+              st.fail(Status.ResourceExhausted, e.getMessage)
+              None
+          }
+        msg match {
+          case None => more = false
+          case Some((compressed, framed)) =>
+            consumed += 5 + framed.length
+            // gzip|snappy|zstd, the reference's negotiated codec set
+            // (configgrpc.go:385-391). A failure here is a per-STREAM
+            // error answered with trailers, NEVER a thrown exception —
+            // that would unwind into the connection catch-all and
+            // silently reset every sibling stream on this connection
+            val enc = st.headers.getOrElse("grpc-encoding", "identity")
+            val body =
+              if (!compressed) Some(framed)
+              else if (!GrpcOtlp.GrpcCodecs(enc)) {
+                st.fail(Status.Unimplemented,
+                  s"grpc: Decompressor is not installed for grpc-encoding \"$enc\"")
+                None
+              } else try Some(OtlpHttp.Codec.decode(enc, framed))
+              catch {
+                case scala.util.control.NonFatal(_) =>
+                  st.fail(Status.Internal, s"corrupt $enc message")
+                  None
+              }
+            body.foreach(processBatch(st, _, wireBytes = framed.length.toLong))
         }
       }
       st.buf.reset()
-      if (consumed < bytes.length)
-        st.buf.write(bytes, consumed, bytes.length - consumed)
+      if (!st.dead) st.buf.write(bytes, consumed, bytes.length - consumed)
     }
 
-    private def processBatch(out: java.io.OutputStream, streamId: Int,
-                             st: StreamState, body: Array[Byte],
+    private def processBatch(st: StreamState, body: Array[Byte],
                              wireBytes: Long): Unit = {
       val batch =
         try decodeBatch(body)
@@ -510,8 +366,7 @@ object ArrowGrpc {
             // an undecodable envelope has no batch_id to ack — like a
             // header-parse failure it breaks the stream (arrow.go:309)
             obs.badBatches.incrementAndGet()
-            trailers(out, streamId, Status.Internal, "undecodable batch")
-            st.dead = true
+            st.fail(Status.Internal, "undecodable batch")
             return
         }
       // scope note: ack writes skip send-window bookkeeping — a
@@ -520,15 +375,10 @@ object ArrowGrpc {
       // client grant here could deadlock against incoming DATA; the
       // EXPORTER side (the direction that moves real volume) enforces
       def ack(code: Int, msg: String = ""): Unit = {
-        val enc = encodeStatus(BatchStatus(batch.batchId, code, msg))
-        val frame = new java.io.ByteArrayOutputStream()
-        frame.write(0)
-        frame.write(Array[Byte](
-          ((enc.length >> 24) & 0xFF).toByte, ((enc.length >> 16) & 0xFF).toByte,
-          ((enc.length >> 8) & 0xFF).toByte, (enc.length & 0xFF).toByte))
-        frame.write(enc)
-        H2.writeData(out, streamId, frame.toByteArray, endStream = false)
-        out.flush()
+        H2.writeData(st.out, st.id, H2.grpcFrame(
+          encodeStatus(BatchStatus(batch.batchId, code, msg)), compressed = false),
+          endStream = false)
+        st.out.flush()
       }
       // per-batch metadata headers (client.Metadata over the stream);
       // a parse failure here breaks the stream per the reference
@@ -538,8 +388,7 @@ object ArrowGrpc {
           catch {
             case scala.util.control.NonFatal(_) =>
               obs.badBatches.incrementAndGet()
-              trailers(out, streamId, Status.Internal, "arrow metadata error")
-              st.dead = true
+              st.fail(Status.Internal, "arrow metadata error")
               return
           }
         val hmap = hdrs.groupBy(_._1.toLowerCase)
@@ -627,39 +476,10 @@ object ArrowGrpc {
       ack(Status.Ok)
     }
 
-    /** client half-closed: drain, then OK trailers — the graceful EOS
-      * of the exporter's max_stream_lifetime rollover */
-    private def finishStream(out: java.io.OutputStream, streamId: Int,
-        streams: scala.collection.mutable.HashMap[Int, StreamState]): Unit = {
-      streams.remove(streamId).foreach { st =>
-        if (st.responded && !st.dead) trailers(out, streamId, Status.Ok, "")
-      }
-    }
-
-    private val conns =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[java.net.Socket]()
-    private val acceptor = new Thread(() => {
-      try while (running) {
-        val sock = server.accept()
-        conns.add(sock)
-        val t = new Thread(() => {
-          try handle(sock) finally conns.remove(sock)
-        }, "arrow-grpc-conn")
-        t.setDaemon(true); t.start()
-      } catch { case _: java.io.IOException => () }
-    }, "arrow-grpc-accept")
-    acceptor.setDaemon(true); acceptor.start()
-
-    def boundPort: Int = server.getLocalPort
+    def boundPort: Int = server.boundPort
     /** shutdown severs LIVE streams too, not just the listener — a
       * long-lived stream would otherwise outlive the component */
-    def stop(): Unit = {
-      running = false
-      server.close()
-      conns.forEach { c =>
-        try c.close() catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
+    def stop(): Unit = server.stop()
     def spoolPath(signal: String): String =
       new java.io.File(spoolDir, s"${signal}_arrow").toString
   }
@@ -671,7 +491,7 @@ object ArrowGrpc {
   private final class ArrowUnimplementedException(msg: String)
     extends RuntimeException(msg)
 
-  /** one live h2c connection carrying one Arrow stream;
+  /** one Arrow stream on its own h2c connection ([[H2.ClientStream]]);
     * `msgCodec` = grpc-encoding for sent messages ("" = identity) */
   private final class StreamConn(host: String, port: Int, path: String,
       connectTimeoutMs: Int, readTimeoutMs: Int,
@@ -679,133 +499,24 @@ object ArrowGrpc {
       msgCodec: String) {
     val openedAtMs: Long = System.currentTimeMillis()
     private var nextBatchId = 0L
-    private val sock = tls match {
-      case None =>
-        val s = new java.net.Socket()
-        s.connect(new java.net.InetSocketAddress(host, port), connectTimeoutMs)
-        s
-      case Some(cfg) => Tls.clientSocket(cfg, host, port)
-    }
-    sock.setSoTimeout(readTimeoutMs)
-    private val out = new java.io.BufferedOutputStream(sock.getOutputStream)
-    private val in = new java.io.BufferedInputStream(sock.getInputStream)
-    private val decoder = new GrpcOtlp.Hpack.Decoder
-    private val recvBuf = new java.io.ByteArrayOutputStream()
-    private var trailersSeen: Option[(Int, String)] = None
-    // response header-block reassembly: frames buffer here until
-    // END_HEADERS; END_STREAM is latched from the initiating HEADERS
-    private val headerBlock = new java.io.ByteArrayOutputStream()
-    private var headerEndStream = false
-    // send-direction flow control (RFC 9113 §5.2): ENFORCED, not just
-    // announced — both axes start at the protocol default 65535 and
-    // only the peer's SETTINGS/WINDOW_UPDATEs open them; a stingy
-    // conformant server is honored instead of overrun
-    private var connWindow: Long = 65535L
-    private var streamWindow: Long = 65535L
-    private var peerInitialWindow: Long = 65535L
+    private val call = new H2.ClientStream(graft.pipeline.ConfigNet.connect(
+        graft.pipeline.ConfigNet.Tcp, host, port, connectTimeoutMs, readTimeoutMs, tls),
+      path, s"$host:$port", msgCodec, auth)
 
-    /** one peer frame, every direction-agnostic effect applied:
-      * settings (incl. INITIAL_WINDOW_SIZE deltas), ping acks, window
-      * grants, response headers/trailers, ack DATA into recvBuf */
-    private def handleFrame(f: H2.Frame): Unit = f.tpe match {
-      case H2.SETTINGS =>
-        if ((f.flags & H2.FlagAck) == 0) {
-          var i = 0
-          while (i + 6 <= f.payload.length) {
-            val id = ((f.payload(i) & 0xFF) << 8) | (f.payload(i + 1) & 0xFF)
-            val v = ((f.payload(i + 2) & 0xFFL) << 24) |
-              ((f.payload(i + 3) & 0xFFL) << 16) |
-              ((f.payload(i + 4) & 0xFFL) << 8) | (f.payload(i + 5) & 0xFFL)
-            if (id == 0x4) { // INITIAL_WINDOW_SIZE: delta on STREAM windows
-              streamWindow += v - peerInitialWindow
-              peerInitialWindow = v
-            }
-            i += 6
-          }
-          H2.write(out, H2.SETTINGS, H2.FlagAck, 0, Array.empty); out.flush()
-        }
-      case H2.PING =>
-        if ((f.flags & H2.FlagAck) == 0) {
-          H2.write(out, H2.PING, H2.FlagAck, 0, f.payload); out.flush()
-        }
-      case H2.WINDOW_UPDATE =>
-        val inc = (((f.payload(0) & 0x7F) << 24) | ((f.payload(1) & 0xFF) << 16) |
-          ((f.payload(2) & 0xFF) << 8) | (f.payload(3) & 0xFF)).toLong
-        if (f.streamId == 0) connWindow += inc
-        else if (f.streamId == 1) streamWindow += inc
-      case H2.HEADERS | H2.CONTINUATION if f.streamId == 1 =>
-        // accumulate until END_HEADERS before decoding: a real gRPC
-        // server may split one header block across CONTINUATION
-        // frames, and HPACK state is only consistent over the WHOLE
-        // block (the receiver side already buffers this way) —
-        // per-frame decode would fail mid-block and sever the stream.
-        // END_STREAM rides the initiating HEADERS frame only
-        // (CONTINUATION has no such flag), so latch it there.
-        if (f.tpe == H2.HEADERS)
-          headerEndStream = (f.flags & H2.FlagEndStream) != 0
-        // a conformant server may pad response headers/trailers —
-        // strip PADDED/PRIORITY fields before buffering, same as
-        // both server decoders, or the client HPACK state corrupts
-        headerBlock.write(H2.headerFields(f.tpe, f.flags, f.payload))
-        if ((f.flags & H2.FlagEndHeaders) != 0) {
-          val hs = decoder.decode(headerBlock.toByteArray).toMap
-          headerBlock.reset()
-          if (headerEndStream) {
-            val status = hs.getOrElse("grpc-status", "2").toInt
-            val msg = hs.getOrElse("grpc-message", "")
-            trailersSeen = Some((status, msg))
-            if (status == Status.Unimplemented)
-              throw new ArrowUnimplementedException(msg)
-            // stream severed by the server: transient statuses are
-            // ErrStreamRestarting (retryable); a refusal like
-            // UNAUTHENTICATED/INVALID_ARGUMENT retried forever
-            // would loop — permanent, like the unary exporter
-            if (status == Status.ResourceExhausted ||
-                status == Status.Unavailable)
-              throw new java.io.IOException(
-                s"stream ended by server: grpc-status $status $msg")
-            throw new graft.pipeline.Pipeline.PermanentExportException(
-              s"stream refused by server: grpc-status $status $msg")
-          }
-        }
-      case H2.DATA if f.streamId == 1 => recvBuf.write(f.payload)
-      case H2.RST_STREAM =>
-        throw new java.io.IOException("stream reset by server")
-      case _ => ()
+    /** the server ended the stream (`trailers`): UNIMPLEMENTED is the
+      * downgrade trigger; transient statuses are ErrStreamRestarting
+      * (retryable); a refusal like UNAUTHENTICATED/INVALID_ARGUMENT
+      * retried forever would loop — permanent, like the unary
+      * exporter */
+    private def ended(trailers: Map[String, String]): Exception = {
+      val status = trailers.getOrElse("grpc-status", "2").toInt
+      val msg = trailers.getOrElse("grpc-message", "")
+      if (status == Status.Unimplemented) new ArrowUnimplementedException(msg)
+      else if (status == Status.ResourceExhausted || status == Status.Unavailable)
+        new java.io.IOException(s"stream ended by server: grpc-status $status $msg")
+      else new graft.pipeline.Pipeline.PermanentExportException(
+        s"stream refused by server: grpc-status $status $msg")
     }
-
-    /** DATA chunked within BOTH send windows: when the window is
-      * shut, block reading peer frames until a grant arrives (ack
-      * DATA buffers for the later await) */
-    private def writeDataFlowControlled(body: Array[Byte]): Unit = {
-      var off = 0
-      while (off < body.length) {
-        while (math.min(connWindow, streamWindow) <= 0L) {
-          out.flush()
-          val f = H2.read(in)
-          if (f == null)
-            throw new java.io.IOException("connection closed awaiting window")
-          handleFrame(f)
-        }
-        val n = math.min(
-          math.min(H2.MaxFrame.toLong, (body.length - off).toLong),
-          math.min(connWindow, streamWindow)).toInt
-        H2.write(out, H2.DATA, 0, 1,
-          java.util.Arrays.copyOfRange(body, off, off + n))
-        connWindow -= n; streamWindow -= n
-        off += n
-      }
-      out.flush()
-    }
-
-    H2.handshakeClient(out)
-    H2.write(out, H2.HEADERS, H2.FlagEndHeaders, 1, GrpcOtlp.Hpack.encode(
-      Seq(":method" -> "POST", ":scheme" -> "http", ":path" -> path,
-        ":authority" -> s"$host:$port",
-        "content-type" -> "application/grpc", "te" -> "trailers") ++
-        (if (msgCodec.nonEmpty) Seq("grpc-encoding" -> msgCodec) else Nil) ++
-        auth.toSeq.flatMap(_.headers().map { case (k, v) => k.toLowerCase -> v })))
-    out.flush()
 
     def ageMs: Long = System.currentTimeMillis() - openedAtMs
     /** last send/ack activity — the keepalive idle axis */
@@ -864,20 +575,7 @@ object ArrowGrpc {
       * time BEFORE the next batch is written into it — a dead TCP
       * path fails here, cheaply, instead of after a full send */
     def ping(): Unit = {
-      val token = Array.tabulate[Byte](8)(i =>
-        ((openedAtMs >> (i * 8)) & 0xFF).toByte)
-      H2.write(out, H2.PING, 0, 0, token)
-      out.flush()
-      var acked = false
-      while (!acked) {
-        val f = H2.read(in)
-        if (f == null) throw new java.io.IOException("connection closed on keepalive ping")
-        if (f.tpe == H2.PING && (f.flags & H2.FlagAck) != 0 &&
-            java.util.Arrays.equals(f.payload, token)) acked = true
-        else if (f.tpe == H2.GOAWAY)
-          throw new java.io.IOException("stream closed on keepalive ping")
-        else handleFrame(f) // window grants etc. must not be dropped
-      }
+      call.ping(Array.tabulate[Byte](8)(i => ((openedAtMs >> (i * 8)) & 0xFF).toByte))
       lastUsedMs = System.currentTimeMillis()
     }
 
@@ -885,53 +583,22 @@ object ArrowGrpc {
     var lastWireBytes: Long = 0L
     /** send one BatchArrowRecords as a length-prefixed gRPC message */
     def send(b: BatchArrowRecords): Unit = {
-      val raw = ArrowGrpc.encodeBatch(b)
-      val msg = if (msgCodec.nonEmpty) OtlpHttp.Codec.encode(msgCodec, raw) else raw
-      lastWireBytes = msg.length.toLong
-      val frame = new java.io.ByteArrayOutputStream()
-      frame.write(if (msgCodec.nonEmpty) 1 else 0)
-      frame.write(Array[Byte](
-        ((msg.length >> 24) & 0xFF).toByte, ((msg.length >> 16) & 0xFF).toByte,
-        ((msg.length >> 8) & 0xFF).toByte, (msg.length & 0xFF).toByte))
-      frame.write(msg)
-      writeDataFlowControlled(frame.toByteArray)
+      lastWireBytes = call.sendMessage(encodeBatch(b), endStream = false).toLong
+      call.trailers.foreach(t => throw ended(t))
     }
 
     /** block until the BatchStatus for `batchId` arrives (one batch
       * in flight per stream slot — SendAndWait semantics) */
     def await(batchId: Long): BatchStatus = {
-      while (true) {
-        // complete message already buffered?
-        val bytes = recvBuf.toByteArray
-        if (bytes.length >= 5) {
-          // UNSIGNED length (same wrap-negative class as the receiver
-          // paths); a BatchStatus over 1 MiB is a broken peer — sever
-          // retryably instead of crashing out of the catch clauses
-          val mlen = ((bytes(1) & 0xFFL) << 24) | ((bytes(2) & 0xFFL) << 16) |
-            ((bytes(3) & 0xFFL) << 8) | (bytes(4) & 0xFFL)
-          if (mlen > (1L << 20))
-            throw new java.io.IOException(s"oversized status message: $mlen")
-          if (bytes.length >= 5 + mlen) {
-            val body = java.util.Arrays.copyOfRange(bytes, 5, 5 + mlen.toInt)
-            recvBuf.reset()
-            recvBuf.write(bytes, 5 + mlen.toInt, bytes.length - 5 - mlen.toInt)
-            val st = ArrowGrpc.decodeStatus(body)
-            if (st.batchId == batchId) return st
-            // an ack for a batch nobody waits on breaks the stream
-            // (stream.go:381 unrecognized batch ID)
-            throw new java.io.IOException(
-              s"unexpected batch ack ${st.batchId} (awaiting $batchId)")
-          }
-        }
-        val f = H2.read(in)
-        if (f == null) throw new java.io.IOException("connection closed mid-stream")
-        handleFrame(f)
-      }
-      throw new IllegalStateException("unreachable")
+      val st = decodeStatus(call.message(H2.MaxResponseBytes)
+        .getOrElse(throw ended(call.trailers.get)))
+      // an ack for a batch nobody waits on breaks the stream
+      // (stream.go:381 unrecognized batch ID)
+      if (st.batchId != batchId) throw new java.io.IOException(
+        s"unexpected batch ack ${st.batchId} (awaiting $batchId)")
+      st
     }
 
-    /** graceful CloseSend: END_STREAM, then read the OK trailers —
-      * the max_stream_lifetime rollover (stream.go:279-283) */
     /** free the delta encoder's off-heap Arrow buffers — every sever,
       * rollover, downgrade, or shutdown path must release them or a
       * long-running pipeline leaks one allocator per stream */
@@ -940,34 +607,19 @@ object ArrowGrpc {
       deltaEnc = null
     }
 
+    /** graceful CloseSend: END_STREAM, then read the OK trailers —
+      * the max_stream_lifetime rollover (stream.go:279-283) */
     def closeGraceful(): Unit = {
       releaseDelta()
       try {
-        H2.writeData(out, 1, Array.empty, endStream = true)
-        out.flush()
-        // END_STREAM rides the HEADERS frame; the block may continue
-        // in CONTINUATION frames, so wait for END_HEADERS after it.
-        // No decode: the connection closes right after, so HPACK
-        // state no longer matters (and a split block would not
-        // decode frame-by-frame anyway)
-        var eosSeen = false
-        var done = trailersSeen.isDefined
-        while (!done) {
-          val f = H2.read(in)
-          if (f == null) done = true
-          else if ((f.tpe == H2.HEADERS || f.tpe == H2.CONTINUATION) &&
-              f.streamId == 1) {
-            if (f.tpe == H2.HEADERS && (f.flags & H2.FlagEndStream) != 0)
-              eosSeen = true
-            if (eosSeen && (f.flags & H2.FlagEndHeaders) != 0) done = true
-          }
-        }
+        call.halfClose()
+        while (call.trailers.isEmpty) call.next()
       } catch { case scala.util.control.NonFatal(_) => () }
       finally close()
     }
     def close(): Unit = {
       releaseDelta()
-      try sock.close() catch { case scala.util.control.NonFatal(_) => () }
+      call.close()
     }
   }
 
@@ -1015,15 +667,7 @@ object ArrowGrpc {
         "delta encoder's win is the dictionary itself) — set codec " +
         "to 'none' explicitly rather than silently dropping " +
         s"'$codec'")
-    private val msgCodec: String = {
-      // none/identity both mean "off" (configgrpc accepts either)
-      val c = if (compression.nonEmpty && compression != "none" &&
-          compression != "identity") compression
-        else if (compression.isEmpty && gzipMessages) "gzip" else ""
-      require(c.isEmpty || GrpcOtlp.GrpcCodecs(c),
-        s"unsupported grpc compression '$c' (${GrpcOtlp.GrpcCodecs.mkString("|")})")
-      c
-    }
+    private val msgCodec = GrpcOtlp.grpcEncoding(compression, gzipMessages)
     private val path =
       if (useStreamPath) StreamPath
       else PathsBySignal.getOrElse(signal,

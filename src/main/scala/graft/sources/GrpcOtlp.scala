@@ -17,17 +17,18 @@ import org.apache.spark.sql.functions._
   * (1-byte compressed flag + 4-byte BE length), grpc-status /
   * grpc-message trailers including the trailers-only error form, and
   * google.rpc.Status + RetryInfo in `grpc-status-details-bin`
-  * (hand-rolled pb like the rest of OtlpProtobuf) so
+  * (through OtlpProtobuf's wire codec) so
   * RESOURCE_EXHAUSTED carries the server's retry pushback the way
   * the reference's otlp exporter consumes it.
   *
-  * Scope honesty: this file is the unary Export* loopback subset —
-  * one request per stream, identity/gzip/snappy/zstd grpc-encoding, no flow-
-  * control bookkeeping (both ends announce 1 GiB windows up front so
-  * unary exchanges never block). The otel-arrow BIDIRECTIONAL stream
-  * lifecycle — long-lived streams, per-batch acks, window
-  * replenishment for sustained flows — lives in [[ArrowGrpc]] on
-  * this same h2c/HPACK layer.
+  * Scope honesty: the unary Export* endpoints here are one request
+  * per stream, identity/gzip/snappy/zstd grpc-encoding. [[H2]] is
+  * the h2c/gRPC core both gRPC surfaces share: the one server
+  * connection loop (both receivers), the one client call with
+  * enforced send windows (both exporters) and the gRPC message prefix
+  * codec. The otel-arrow BIDIRECTIONAL stream lifecycle — long-lived
+  * streams, per-batch acks — lives in [[ArrowGrpc]] on this same
+  * layer.
   */
 object GrpcOtlp {
 
@@ -57,8 +58,24 @@ object GrpcOtlp {
     * [[OtlpHttp.Codec]] */
   val GrpcCodecs: Set[String] = Set("gzip", "snappy", "zstd")
 
+  /** an exporter's grpc-encoding: `compression` wins when set, and
+    * none/identity both mean "off" (configgrpc accepts either); the
+    * legacy gzip flag applies only when `compression` is unset */
+  private[sources] def grpcEncoding(compression: String, legacyGzip: Boolean): String = {
+    val c = if (compression.nonEmpty && compression != "none" &&
+        compression != "identity") compression
+      else if (compression.isEmpty && legacyGzip) "gzip" else ""
+    require(c.isEmpty || GrpcCodecs(c),
+      s"unsupported grpc compression '$c' (${GrpcCodecs.mkString("|")})")
+    c
+  }
+
   // ---- HTTP/2 framing ----------------------------------------------
 
+  /** h2c + gRPC framing for both gRPC surfaces: frame codec, the one
+    * server connection loop ([[Server]]), the one client call
+    * ([[ClientStream]]) and the gRPC message prefix codec
+    * ([[grpcFrame]] / [[grpcMessage]]). */
   private[graft] object H2 {
     val Preface: Array[Byte] = "PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n".getBytes("US-ASCII")
     val DATA = 0x0; val HEADERS = 0x1; val RST_STREAM = 0x3
@@ -99,9 +116,9 @@ object GrpcOtlp {
       * be set together and ONLY on HEADERS (CONTINUATION carries the
       * bare block) — strip the pad-length byte first, then the 5-byte
       * priority field, then the trailing padding. Every HPACK buffer
-      * (both servers AND the exporter client) must go through this:
-      * a peer that pads would otherwise corrupt the connection's
-      * shared decoder state. */
+      * ([[Server]] and [[ClientStream]] alike) goes through this: a
+      * peer that pads would otherwise corrupt the connection's shared
+      * decoder state. */
     def headerFields(tpe: Int, flags: Int, payload: Array[Byte]): Array[Byte] =
       if (tpe != HEADERS) payload
       else {
@@ -121,13 +138,14 @@ object GrpcOtlp {
         ((w >> 8) & 0xFF).toByte, (w & 0xFF).toByte)
     }
 
-    /** connection-level WINDOW_UPDATE to match (stream 0) */
-    def bigWindowUpdate(out: java.io.OutputStream): Unit = {
-      val inc = (1 << 30) - 65535
-      write(out, WINDOW_UPDATE, 0, 0, Array[Byte](
+    def windowUpdate(out: java.io.OutputStream, streamId: Int, inc: Int): Unit =
+      write(out, WINDOW_UPDATE, 0, streamId, Array[Byte](
         ((inc >> 24) & 0x7F).toByte, ((inc >> 16) & 0xFF).toByte,
         ((inc >> 8) & 0xFF).toByte, (inc & 0xFF).toByte))
-    }
+
+    /** connection-level WINDOW_UPDATE to match (stream 0) */
+    def bigWindowUpdate(out: java.io.OutputStream): Unit =
+      windowUpdate(out, 0, (1 << 30) - 65535)
 
     /** open the h2c conversation from either side */
     def handshakeClient(out: java.io.OutputStream): Unit = {
@@ -157,6 +175,345 @@ object GrpcOtlp {
           streamId, java.util.Arrays.copyOfRange(body, off, off + n))
         off += n
       }
+    }
+
+    /** response HEADERS opening a successful gRPC response */
+    def responseHeaders(out: java.io.OutputStream, streamId: Int): Unit =
+      write(out, HEADERS, FlagEndHeaders, streamId, Hpack.encode(
+        Seq(":status" -> "200", "content-type" -> "application/grpc")))
+
+    /** close `streamId` with gRPC trailers. A trailers-only response
+      * (no response HEADERS sent) carries the HTTP status and
+      * content-type too; `details` is grpc-status-details-bin. */
+    def trailers(out: java.io.OutputStream, streamId: Int, status: Int,
+                 msg: String, trailersOnly: Boolean, details: String = ""): Unit = {
+      val hs =
+        (if (trailersOnly) Seq(":status" -> "200", "content-type" -> "application/grpc")
+        else Nil) ++ Seq("grpc-status" -> status.toString) ++
+          (if (msg.nonEmpty) Seq("grpc-message" -> msg) else Nil) ++
+          (if (details.nonEmpty) Seq("grpc-status-details-bin" -> details) else Nil)
+      write(out, HEADERS, FlagEndHeaders | FlagEndStream, streamId, Hpack.encode(hs))
+      out.flush()
+    }
+
+    // ---- gRPC message prefix (1-byte compressed flag + 4-byte BE length)
+
+    /** `msg` as one length-prefixed gRPC message */
+    def grpcFrame(msg: Array[Byte], compressed: Boolean): Array[Byte] = {
+      val f = new Array[Byte](5 + msg.length)
+      if (compressed) f(0) = 1
+      f(1) = ((msg.length >> 24) & 0xFF).toByte; f(2) = ((msg.length >> 16) & 0xFF).toByte
+      f(3) = ((msg.length >> 8) & 0xFF).toByte; f(4) = (msg.length & 0xFF).toByte
+      System.arraycopy(msg, 0, f, 5, msg.length)
+      f
+    }
+
+    /** size gate on the response messages a client reads: a
+      * BatchStatus or an Export*ServiceResponse is tiny, anything past
+      * 1 MiB is a broken peer */
+    val MaxResponseBytes: Long = 1L << 20
+
+    /** a gRPC message whose prefix claims more than the reader's size
+      * gate (gRPC's own max_recv_msg_size wording) */
+    final class MessageTooLarge(length: Long, max: Long)
+      extends java.io.IOException(s"received message larger than max ($length vs $max)")
+
+    /** The gRPC message framed at `buf[off, end)` as (compressed, body);
+      * None until all of it has arrived. The length is read UNSIGNED:
+      * a high-bit prefix hits the `maxBytes` gate as the huge number it
+      * claims ([[MessageTooLarge]]), never wraps negative past it. */
+    def grpcMessage(buf: Array[Byte], off: Int, end: Int,
+                    maxBytes: Long): Option[(Boolean, Array[Byte])] = {
+      if (end - off < 5) return None
+      val len = ((buf(off + 1) & 0xFFL) << 24) | ((buf(off + 2) & 0xFFL) << 16) |
+        ((buf(off + 3) & 0xFFL) << 8) | (buf(off + 4) & 0xFFL)
+      if (len > maxBytes) throw new MessageTooLarge(len, maxBytes)
+      if (end - off - 5 < len) None
+      else Some((buf(off) != 0,
+        java.util.Arrays.copyOfRange(buf, off + 5, off + 5 + len.toInt)))
+    }
+
+    // ---- server --------------------------------------------------------
+
+    /** One request stream on [[Server]]'s connection loop. The loop owns
+      * the frame-level protocol; a handler sees decoded request header
+      * blocks, DATA payloads and the client's half-close, and writes
+      * its response to the connection's `out` (only ever from that
+      * connection's thread). */
+    trait ServerStream {
+      /** a complete request header block (HEADERS + CONTINUATION);
+        * false = the handler answered it and the stream is done */
+      def onHeaders(headers: Map[String, String]): Boolean
+      /** one DATA payload, already granted back to the client */
+      def onData(payload: Array[Byte]): Unit
+      /** the client half-closed (END_STREAM); the stream is gone */
+      def onEnd(): Unit
+    }
+
+    /** The h2c server of both gRPC receivers: accepts on `transport`
+      * and serves each connection on its own daemon thread. The loop
+      * acks SETTINGS and PING, ends the connection at GOAWAY, forgets a
+      * stream at RST_STREAM, reassembles header blocks across
+      * CONTINUATION frames through [[headerFields]], and grants every
+      * DATA payload straight back on the connection and stream windows
+      * (RFC 9113 §5.2): the payload is consumed the moment it arrives,
+      * and a client that keeps one connection or stream open for long
+      * would otherwise stall once its cumulative DATA passed the
+      * initial window. `open(streamId, out)` makes the handler of a new
+      * stream. [[stop]] closes the listener AND severs every live
+      * connection, so no stream outlives the component. */
+    final class Server(transport: graft.pipeline.ConfigNet.Transport, port: Int,
+        tls: Option[TlsConfig], name: String,
+        open: (Int, java.io.OutputStream) => ServerStream) {
+      private val listener = graft.pipeline.ConfigNet.listen(transport, port, tls)
+      private val conns = java.util.concurrent.ConcurrentHashMap
+        .newKeySet[graft.pipeline.ConfigNet.Conn]()
+      @volatile private var running = true
+
+      private final class Open(val handler: ServerStream) {
+        val block = new java.io.ByteArrayOutputStream()
+        var endStream = false // latched from HEADERS until END_HEADERS
+      }
+
+      private def serve(conn: graft.pipeline.ConfigNet.Conn): Unit = {
+        val in = new java.io.BufferedInputStream(conn.in)
+        val out = new java.io.BufferedOutputStream(conn.out)
+        val decoder = new Hpack.Decoder
+        val streams = scala.collection.mutable.HashMap[Int, Open]()
+        def end(id: Int): Unit = streams.remove(id).foreach(_.handler.onEnd())
+        try {
+          handshakeServer(in, out)
+          var f = read(in)
+          while (f != null && f.tpe != GOAWAY) {
+            f.tpe match {
+              case SETTINGS =>
+                if ((f.flags & FlagAck) == 0) {
+                  write(out, SETTINGS, FlagAck, 0, Array.empty); out.flush()
+                }
+              case PING =>
+                if ((f.flags & FlagAck) == 0) {
+                  write(out, PING, FlagAck, 0, f.payload); out.flush()
+                }
+              case RST_STREAM => streams.remove(f.streamId)
+              case HEADERS | CONTINUATION =>
+                val s = streams.getOrElseUpdate(f.streamId,
+                  new Open(open(f.streamId, out)))
+                if (f.tpe == HEADERS) s.endStream = (f.flags & FlagEndStream) != 0
+                s.block.write(headerFields(f.tpe, f.flags, f.payload))
+                if ((f.flags & FlagEndHeaders) != 0) {
+                  val hs = decoder.decode(s.block.toByteArray).toMap
+                  s.block.reset()
+                  if (!s.handler.onHeaders(hs)) streams.remove(f.streamId)
+                  else if (s.endStream) end(f.streamId)
+                }
+              case DATA =>
+                if (f.payload.nonEmpty) {
+                  windowUpdate(out, 0, f.payload.length)
+                  if (streams.contains(f.streamId))
+                    windowUpdate(out, f.streamId, f.payload.length)
+                  out.flush()
+                }
+                streams.get(f.streamId).foreach { s =>
+                  s.handler.onData(f.payload)
+                  if ((f.flags & FlagEndStream) != 0) end(f.streamId)
+                }
+              case _ => () // WINDOW_UPDATE and unknown types: nothing to do
+            }
+            f = read(in)
+          }
+        } catch {
+          case scala.util.control.NonFatal(_) => ()
+        } finally conn.close()
+      }
+
+      private val acceptor = new Thread(() => {
+        try while (running) {
+          val conn = listener.accept()
+          conns.add(conn)
+          if (!running) conn.close() // accepted while stop() severed the rest
+          val t = new Thread(() => try serve(conn) finally conns.remove(conn),
+            s"$name-conn")
+          t.setDaemon(true); t.start()
+        } catch { case _: java.io.IOException => () }
+      }, s"$name-accept")
+      acceptor.setDaemon(true); acceptor.start()
+
+      def boundPort: Int = listener.boundPort
+      def stop(): Unit = {
+        running = false
+        listener.close()
+        conns.forEach { c =>
+          try c.close() catch { case scala.util.control.NonFatal(_) => () }
+        }
+      }
+    }
+
+    // ---- client --------------------------------------------------------
+
+    /** The client side of one h2c connection carrying ONE gRPC call on
+      * stream 1 — a unary Export and a long-lived Arrow stream alike.
+      * Opening it sends the preface, SETTINGS and the request HEADERS.
+      * Response header blocks reassemble across CONTINUATION frames
+      * and lose their padding and priority fields ([[headerFields]])
+      * before HPACK decode: a conformant server may split or pad its
+      * trailers. DATA goes out within BOTH send windows (RFC 9113
+      * §5.2), ENFORCED: they start at the protocol default 65535, only
+      * the peer's SETTINGS (INITIAL_WINDOW_SIZE) and WINDOW_UPDATEs
+      * open them, and a shut window blocks the sender on peer frames
+      * until a grant arrives — a stingy server is honored, not
+      * overrun. `encoding` is the grpc-encoding of sent messages ("" =
+      * identity). */
+    final class ClientStream(conn: graft.pipeline.ConfigNet.Conn, path: String,
+        authority: String, encoding: String,
+        auth: Option[Auth.ClientAuthenticator]) {
+      private val out = new java.io.BufferedOutputStream(conn.out)
+      private val in = new java.io.BufferedInputStream(conn.in)
+      private val decoder = new Hpack.Decoder
+      private val headerBlock = new java.io.ByteArrayOutputStream()
+      private var headerEndStream = false // latched from HEADERS
+      private var responseHeaders = Map.empty[String, String]
+      private val received = new java.io.ByteArrayOutputStream()
+      private var connWindow: Long = 65535L
+      private var streamWindow: Long = 65535L
+      private var peerInitialWindow: Long = 65535L
+      /** every response header block, merged, once the server has
+        * ended the stream (its trailers arrived) */
+      var trailers: Option[Map[String, String]] = None
+
+      try {
+        handshakeClient(out)
+        write(out, HEADERS, FlagEndHeaders, 1, Hpack.encode(
+          Seq(":method" -> "POST", ":scheme" -> "http", ":path" -> path,
+            ":authority" -> authority,
+            "content-type" -> "application/grpc", "te" -> "trailers") ++
+            (if (encoding.nonEmpty) Seq("grpc-encoding" -> encoding) else Nil) ++
+            // PerRPCCredentials half of auth/client.go: credentials as
+            // request metadata (HTTP/2 requires lowercase names)
+            auth.toSeq.flatMap(_.headers().map { case (k, v) => k.toLowerCase -> v })))
+        out.flush()
+      } catch { case e: Throwable => conn.close(); throw e }
+
+      /** read one peer frame and apply it: settings (incl.
+        * INITIAL_WINDOW_SIZE deltas), ping acks, window grants,
+        * response headers/trailers, DATA into the receive buffer */
+      def next(): Frame = {
+        val f = read(in)
+        if (f == null) throw new java.io.IOException("connection closed mid-stream")
+        f.tpe match {
+          case SETTINGS =>
+            if ((f.flags & FlagAck) == 0) {
+              var i = 0
+              while (i + 6 <= f.payload.length) {
+                val id = ((f.payload(i) & 0xFF) << 8) | (f.payload(i + 1) & 0xFF)
+                val v = ((f.payload(i + 2) & 0xFFL) << 24) |
+                  ((f.payload(i + 3) & 0xFFL) << 16) |
+                  ((f.payload(i + 4) & 0xFFL) << 8) | (f.payload(i + 5) & 0xFFL)
+                if (id == 0x4) { // INITIAL_WINDOW_SIZE: delta on STREAM windows
+                  streamWindow += v - peerInitialWindow
+                  peerInitialWindow = v
+                }
+                i += 6
+              }
+              write(out, SETTINGS, FlagAck, 0, Array.empty); out.flush()
+            }
+          case PING =>
+            if ((f.flags & FlagAck) == 0) {
+              write(out, PING, FlagAck, 0, f.payload); out.flush()
+            }
+          case WINDOW_UPDATE =>
+            val inc = (((f.payload(0) & 0x7F) << 24) | ((f.payload(1) & 0xFF) << 16) |
+              ((f.payload(2) & 0xFF) << 8) | (f.payload(3) & 0xFF)).toLong
+            if (f.streamId == 0) connWindow += inc
+            else if (f.streamId == 1) streamWindow += inc
+          case HEADERS | CONTINUATION if f.streamId == 1 =>
+            // END_STREAM rides the initiating HEADERS frame only
+            // (CONTINUATION has no such flag): latch it there, decode
+            // at END_HEADERS — HPACK state is only consistent over the
+            // WHOLE block
+            if (f.tpe == HEADERS) headerEndStream = (f.flags & FlagEndStream) != 0
+            headerBlock.write(headerFields(f.tpe, f.flags, f.payload))
+            if ((f.flags & FlagEndHeaders) != 0) {
+              responseHeaders ++= decoder.decode(headerBlock.toByteArray)
+              headerBlock.reset()
+              if (headerEndStream) trailers = Some(responseHeaders)
+            }
+          case DATA if f.streamId == 1 =>
+            received.write(f.payload)
+            if ((f.flags & FlagEndStream) != 0) trailers = Some(responseHeaders)
+          case RST_STREAM =>
+            throw new java.io.IOException("stream reset by server")
+          case _ => ()
+        }
+        f
+      }
+
+      /** DATA chunked within both send windows; stops early once the
+        * server has ended the stream (nothing it would read) */
+      private def send(body: Array[Byte], endStream: Boolean): Unit = {
+        var off = 0
+        do {
+          while (trailers.isEmpty && off < body.length &&
+              math.min(connWindow, streamWindow) <= 0L) {
+            out.flush()
+            next()
+          }
+          if (trailers.isDefined) { out.flush(); return }
+          val n = math.min(
+            math.min(MaxFrame.toLong, (body.length - off).toLong),
+            math.min(connWindow, streamWindow)).toInt
+          write(out, DATA, if (endStream && off + n == body.length) FlagEndStream else 0,
+            1, java.util.Arrays.copyOfRange(body, off, off + n))
+          connWindow -= n; streamWindow -= n
+          off += n
+        } while (off < body.length)
+        out.flush()
+      }
+
+      /** send one gRPC message, compressed per `encoding`; returns its
+        * length as transmitted (the netstats wire axis) */
+      def sendMessage(raw: Array[Byte], endStream: Boolean): Int = {
+        val msg = if (encoding.nonEmpty) OtlpHttp.Codec.encode(encoding, raw) else raw
+        send(grpcFrame(msg, encoding.nonEmpty), endStream)
+        msg.length
+      }
+
+      /** END_STREAM: the client has nothing more to send */
+      def halfClose(): Unit = send(Array.empty, endStream = true)
+
+      /** the next complete response message, reading frames until it
+        * has arrived; None when the server ended the stream first */
+      def message(maxBytes: Long): Option[Array[Byte]] = {
+        var msg: Option[Array[Byte]] = None
+        var done = false
+        while (!done) {
+          val bytes = received.toByteArray
+          msg = grpcMessage(bytes, 0, bytes.length, maxBytes).map(_._2)
+          msg.foreach { m =>
+            received.reset()
+            received.write(bytes, 5 + m.length, bytes.length - 5 - m.length)
+          }
+          done = msg.isDefined || trailers.isDefined
+          if (!done) next()
+        }
+        msg
+      }
+
+      /** h2 PING round trip (keepalive probe): frames that arrive
+        * meanwhile are applied, a GOAWAY fails the probe */
+      def ping(token: Array[Byte]): Unit = {
+        write(out, PING, 0, 0, token)
+        out.flush()
+        var f = next()
+        while (!(f.tpe == PING && (f.flags & FlagAck) != 0 &&
+            java.util.Arrays.equals(f.payload, token))) {
+          if (f.tpe == GOAWAY || trailers.isDefined)
+            throw new java.io.IOException("stream closed on keepalive ping")
+          f = next()
+        }
+      }
+
+      def close(): Unit =
+        try conn.close() catch { case scala.util.control.NonFatal(_) => () }
     }
   }
 
@@ -417,27 +774,23 @@ object GrpcOtlp {
 
   // ---- google.rpc.Status + RetryInfo (grpc-status-details-bin) -----
 
-  private def varint(v0: Long): Array[Byte] = {
-    var v = v0
-    val out = scala.collection.mutable.ArrayBuffer[Byte]()
-    while ((v & ~0x7FL) != 0L) { out += ((v & 0x7F) | 0x80).toByte; v >>>= 7 }
-    out += (v & 0x7F).toByte
-    out.toArray
-  }
-  private def lenDelim(field: Int, body: Array[Byte]): Array[Byte] =
-    varint((field << 3) | 2L) ++ varint(body.length.toLong) ++ body
-
   /** google.rpc.Status{code, message, details=[Any{RetryInfo{Duration}}]}
     * — the reference exporter's retry pushback carrier (OTLP spec:
     * servers SHOULD attach RetryInfo to RESOURCE_EXHAUSTED) */
   def statusDetailsBin(code: Int, message: String, retryDelayMs: Long): String = {
-    val duration = varint(0x08L) ++ varint(retryDelayMs / 1000) ++
-      varint(0x10L) ++ varint((retryDelayMs % 1000) * 1000000L)
-    val retryInfo = lenDelim(1, duration)
-    val any = lenDelim(1, "type.googleapis.com/google.rpc.RetryInfo".getBytes("US-ASCII")) ++
-      lenDelim(2, retryInfo)
-    val status = varint(0x08L) ++ varint(code.toLong) ++
-      lenDelim(2, message.getBytes("UTF-8")) ++ lenDelim(3, any)
+    val duration = OtlpProtobuf.encode { w =>
+      w.vint(1, retryDelayMs / 1000)
+      w.vint(2, (retryDelayMs % 1000) * 1000000L)
+    }
+    val any = OtlpProtobuf.encode { w =>
+      w.str(1, "type.googleapis.com/google.rpc.RetryInfo")
+      w.lenDelim(2, OtlpProtobuf.encode(_.lenDelim(1, duration)))
+    }
+    val status = OtlpProtobuf.encode { w =>
+      w.vint(1, code.toLong)
+      w.str(2, message)
+      w.lenDelim(3, any)
+    }
     java.util.Base64.getEncoder.withoutPadding.encodeToString(status)
   }
 
@@ -452,38 +805,26 @@ object GrpcOtlp {
         case _ => detailsBin
       }
       val body = java.util.Base64.getDecoder.decode(pad)
-      var p = 0
-      def rv(): Long = {
-        var shift = 0; var v = 0L; var b = 0
-        do { b = body(p) & 0xFF; p += 1; v |= (b & 0x7FL) << shift; shift += 7 }
-        while ((b & 0x80) != 0)
-        v
-      }
-      def walk(end: Int, target: Long => Unit, path: List[Int]): Unit = {
-        while (p < end) {
-          val tag = rv(); val field = (tag >> 3).toInt; val wire = (tag & 7).toInt
-          (wire, path) match {
-            case (2, Nil) if field == 3 => // Status.details
-              val len = rv().toInt; val e = p + len; walk(e, target, List(3))
-            case (2, List(3)) if field == 2 => // Any.value
-              val len = rv().toInt; val e = p + len; walk(e, target, List(3, 2))
-            case (2, List(3, 2)) if field == 1 => // RetryInfo.retry_delay
-              val len = rv().toInt; val e = p + len; walk(e, target, List(3, 2, 1))
-            case (0, List(3, 2, 1)) if field == 1 => target(rv() * 1000L)
-            case (0, List(3, 2, 1)) if field == 2 => target(rv() / 1000000L)
-            case (0, _) => rv()
-            case (2, _) =>
-              // NB: `p += rv()` would read p BEFORE rv() advances it
-              val skip = rv().toInt; p += skip
-            case (5, _) => p += 4
-            case (1, _) => p += 8
-            case _ => p = end
-          }
+      // Status.details(3) → Any.value(2) → RetryInfo.retry_delay(1),
+      // then Duration{seconds = 1, nanos = 2}
+      val path = Array(3, 2, 1)
+      def walk(r: OtlpProtobuf.Reader, depth: Int): Long = {
+        var ms = 0L
+        while (r.hasNext) {
+          val tag = r.varint()
+          val field = (tag >>> 3).toInt; val wire = (tag & 7).toInt
+          if (depth < path.length && wire == 2 && field == path(depth)) {
+            val (o, l) = r.lenDelim()
+            ms += walk(new OtlpProtobuf.Reader(body, o, o + l), depth + 1)
+          } else if (depth == path.length && wire == 0 && field == 1)
+            ms += r.varint() * 1000L
+          else if (depth == path.length && wire == 0 && field == 2)
+            ms += r.varint() / 1000000L
+          else r.skip(wire)
         }
+        ms
       }
-      var ms = 0L
-      walk(body.length, v => ms += v, Nil)
-      ms
+      walk(new OtlpProtobuf.Reader(body, 0, body.length), 0)
     } catch { case scala.util.control.NonFatal(_) => 0L }
   }
 
@@ -512,7 +853,8 @@ object GrpcOtlp {
     * on the identical parse/DLQ path. `throttle(signal)` returning
     * Some(delayMs) refuses the request with RESOURCE_EXHAUSTED +
     * RetryInfo; `partial` returns (rejected, message) to attach an
-    * Export*PartialSuccess to the 0-status response. */
+    * Export*PartialSuccess to the 0-status response. [[stop]] severs
+    * live connections too. */
   final class OtlpGrpcReceiver(port: Int, spoolDir: String,
       throttle: String => Option[Long] = _ => None,
       partial: (String, Array[Byte]) => Option[(Long, String)] = (_, _) => None,
@@ -527,129 +869,48 @@ object GrpcOtlp {
       maxRecvMsgBytes: Long = 4L * 1024 * 1024,
       // confignet transport (config/confignet NetAddr): tcp loopback
       // (default) or an AF_UNIX stream socket — the h2c protocol
-      // code below is transport-blind
+      // code is transport-blind
       transport: graft.pipeline.ConfigNet.Transport =
         graft.pipeline.ConfigNet.Tcp) {
     val obs = new GrpcObs
     private val counter = new java.util.concurrent.atomic.AtomicLong
-    private val server: graft.pipeline.ConfigNet.StreamServer =
-      graft.pipeline.ConfigNet.listen(transport, port, tls)
-    @volatile private var running = true
 
-    private final class StreamBuf {
-      var headers: Map[String, String] = Map.empty
-      val data = new java.io.ByteArrayOutputStream()
-      var headerBlock = new java.io.ByteArrayOutputStream()
-      var headersDone = false
-    }
-
-    private def handle(sock: graft.pipeline.ConfigNet.Conn): Unit = {
-      val in = new java.io.BufferedInputStream(sock.in)
-      val out = new java.io.BufferedOutputStream(sock.out)
-      val decoder = new Hpack.Decoder
-      val streams = scala.collection.mutable.HashMap[Int, StreamBuf]()
-      try {
-        H2.handshakeServer(in, out)
-        var open = true
-        while (open) {
-          val f = H2.read(in)
-          if (f == null) open = false
-          else f.tpe match {
-            case H2.SETTINGS =>
-              if ((f.flags & H2.FlagAck) == 0)
-                H2.write(out, H2.SETTINGS, H2.FlagAck, 0, Array.empty)
-              out.flush()
-            case H2.PING =>
-              if ((f.flags & H2.FlagAck) == 0) {
-                H2.write(out, H2.PING, H2.FlagAck, 0, f.payload); out.flush()
-              }
-            case H2.WINDOW_UPDATE => ()
-            case H2.GOAWAY => open = false
-            case H2.RST_STREAM => streams.remove(f.streamId)
-            case H2.HEADERS | H2.CONTINUATION =>
-              val sb = streams.getOrElseUpdate(f.streamId, new StreamBuf)
-              sb.headerBlock.write(H2.headerFields(f.tpe, f.flags, f.payload))
-              if ((f.flags & H2.FlagEndHeaders) != 0) {
-                sb.headers = sb.headers ++
-                  decoder.decode(sb.headerBlock.toByteArray).toMap
-                sb.headerBlock = new java.io.ByteArrayOutputStream()
-                sb.headersDone = true
-                // an unknown method is answered at HEADERS time (what
-                // a real gRPC server does) — a STREAMING caller, e.g.
-                // the Arrow exporter probing for ArrowStreamService,
-                // never half-closes, so waiting for END_STREAM would
-                // stall its downgrade probe until timeout
-                val p = sb.headers.getOrElse(":path", "")
-                if (sb.headers.getOrElse(":method", "") != "POST" ||
-                    !byPath.contains(p)) {
-                  streams.remove(f.streamId)
-                  obs.badRequests.incrementAndGet()
-                  trailersOnly(out, f.streamId, Status.Unimplemented,
-                    s"unknown method $p")
-                }
-              }
-              if (streams.contains(f.streamId) &&
-                  (f.flags & H2.FlagEndStream) != 0 && sb.headersDone)
-                respondStream(out, f.streamId, streams.remove(f.streamId).get)
-            case H2.DATA =>
-              // flow-control replenishment (RFC 9113 §5.2, r10
-              // verdict #3): the frame is consumed into the request
-              // buffer the moment it arrives, so grant it straight
-              // back on BOTH axes. Without this a conformant client
-              // POOLING ONE LONG-LIVED CONNECTION stalls for good
-              // once cumulative unary DATA burns through the initial
-              // connection window — same loop as the Arrow stream
-              // receiver's
-              if (f.payload.nonEmpty) {
-                val inc = Array[Byte](
-                  ((f.payload.length >> 24) & 0x7F).toByte,
-                  ((f.payload.length >> 16) & 0xFF).toByte,
-                  ((f.payload.length >> 8) & 0xFF).toByte,
-                  (f.payload.length & 0xFF).toByte)
-                H2.write(out, H2.WINDOW_UPDATE, 0, 0, inc)
-                if (streams.contains(f.streamId))
-                  H2.write(out, H2.WINDOW_UPDATE, 0, f.streamId, inc)
-                out.flush()
-              }
-              streams.get(f.streamId).foreach { sb =>
-                sb.data.write(f.payload)
-                if ((f.flags & H2.FlagEndStream) != 0) {
-                  streams.remove(f.streamId)
-                  respondStream(out, f.streamId, sb)
-                }
-              }
-            case _ => () // unknown frame types are ignored per RFC
-          }
+    /** one unary call: the request buffers until the client half-closes */
+    private final class UnaryCall(streamId: Int, out: java.io.OutputStream)
+        extends H2.ServerStream {
+      private var headers = Map.empty[String, String]
+      private val data = new java.io.ByteArrayOutputStream()
+      def onHeaders(hs: Map[String, String]): Boolean = {
+        headers ++= hs
+        // an unknown method is answered at HEADERS time (what a real
+        // gRPC server does) — a STREAMING caller, e.g. the Arrow
+        // exporter probing for ArrowStreamService, never half-closes,
+        // so waiting for END_STREAM would stall its downgrade probe
+        // until timeout
+        val path = headers.getOrElse(":path", "")
+        val known = headers.getOrElse(":method", "") == "POST" && byPath.contains(path)
+        if (!known) {
+          obs.badRequests.incrementAndGet()
+          trailersOnly(out, streamId, Status.Unimplemented, s"unknown method $path")
         }
-      } catch {
-        case _: java.io.IOException if !running => ()
-        case scala.util.control.NonFatal(_) => ()
-      } finally sock.close()
+        known
+      }
+      def onData(payload: Array[Byte]): Unit = data.write(payload)
+      def onEnd(): Unit = respond(out, streamId, headers, data.toByteArray)
     }
+
+    private val server = new H2.Server(transport, port, tls, "grpc",
+      new UnaryCall(_, _))
 
     private def trailersOnly(out: java.io.OutputStream, streamId: Int,
-        status: Int, msg: String, retryDelayMs: Long = -1L): Unit = {
-      val base = Seq(":status" -> "200", "content-type" -> "application/grpc",
-        "grpc-status" -> status.toString, "grpc-message" -> msg)
-      val hs = if (retryDelayMs >= 0L)
-        base :+ ("grpc-status-details-bin" ->
-          statusDetailsBin(status, msg, retryDelayMs))
-      else base
-      H2.write(out, H2.HEADERS, H2.FlagEndHeaders | H2.FlagEndStream,
-        streamId, Hpack.encode(hs))
-      out.flush()
-    }
+        status: Int, msg: String, retryDelayMs: Long = -1L): Unit =
+      H2.trailers(out, streamId, status, msg, trailersOnly = true,
+        details = if (retryDelayMs >= 0L) statusDetailsBin(status, msg, retryDelayMs) else "")
 
-    private def respondStream(out: java.io.OutputStream, streamId: Int,
-                              sb: StreamBuf): Unit = {
-      val path = sb.headers.getOrElse(":path", "")
-      val signal = byPath.get(path)
-      if (sb.headers.getOrElse(":method", "") != "POST" || signal.isEmpty) {
-        obs.badRequests.incrementAndGet()
-        trailersOnly(out, streamId, Status.Unimplemented, s"unknown method $path")
-        return
-      }
-      if (!sb.headers.getOrElse("content-type", "").startsWith("application/grpc")) {
+    private def respond(out: java.io.OutputStream, streamId: Int,
+                        headers: Map[String, String], raw: Array[Byte]): Unit = {
+      val signal = byPath(headers(":path"))
+      if (!headers.getOrElse("content-type", "").startsWith("application/grpc")) {
         obs.badRequests.incrementAndGet()
         trailersOnly(out, streamId, Status.Internal, "content-type must be application/grpc")
         return
@@ -660,7 +921,7 @@ object GrpcOtlp {
       var authAttrs = Map.empty[String, String]
       auth match {
         case Some(a) =>
-          a.authenticate(sb.headers.map { case (k, v) => k -> Seq(v) }) match {
+          a.authenticate(headers.map { case (k, v) => k -> Seq(v) }) match {
             case Left(reason) =>
               obs.denied.incrementAndGet()
               trailersOnly(out, streamId, Status.Unauthenticated, reason)
@@ -669,32 +930,22 @@ object GrpcOtlp {
           }
         case None => ()
       }
-      val raw = sb.data.toByteArray
-      if (raw.length < 5) {
-        obs.badRequests.incrementAndGet()
-        trailersOnly(out, streamId, Status.InvalidArgument, "truncated grpc frame")
-        return
-      }
-      val compressed = raw(0) != 0
-      // UNSIGNED 32-bit length (a high-bit prefix must hit the size
-      // gate, not wrap negative past it into an array-bounds crash)
-      val mlen = ((raw(1) & 0xFFL) << 24) | ((raw(2) & 0xFFL) << 16) |
-        ((raw(3) & 0xFFL) << 8) | (raw(4) & 0xFFL)
-      if (mlen > maxRecvMsgBytes) {
-        obs.throttled.incrementAndGet()
-        trailersOnly(out, streamId, Status.ResourceExhausted,
-          s"received message larger than max ($mlen vs $maxRecvMsgBytes)")
-        return
-      }
-      if (raw.length < 5 + mlen) {
-        obs.badRequests.incrementAndGet()
-        trailersOnly(out, streamId, Status.InvalidArgument, "truncated grpc message")
-        return
-      }
-      val framed = java.util.Arrays.copyOfRange(raw, 5, 5 + mlen.toInt)
+      val (compressed, framed) =
+        try H2.grpcMessage(raw, 0, raw.length, maxRecvMsgBytes) match {
+          case Some(m) => m
+          case None =>
+            obs.badRequests.incrementAndGet()
+            trailersOnly(out, streamId, Status.InvalidArgument, "truncated grpc message")
+            return
+        } catch {
+          case e: H2.MessageTooLarge =>
+            obs.throttled.incrementAndGet()
+            trailersOnly(out, streamId, Status.ResourceExhausted, e.getMessage)
+            return
+        }
       val body =
         if (!compressed) framed
-        else sb.headers.get("grpc-encoding") match {
+        else headers.get("grpc-encoding") match {
           // gzip|snappy|zstd — the reference's negotiated codec set
           // (configgrpc.go:385-391), kernels shared with the HTTP pair
           case Some(enc) if GrpcCodecs(enc) =>
@@ -710,7 +961,7 @@ object GrpcOtlp {
               s"grpc-encoding ${other.getOrElse("")} unsupported")
             return
         }
-      throttle(signal.get) match {
+      throttle(signal) match {
         case Some(delayMs) =>
           obs.throttled.incrementAndGet()
           trailersOnly(out, streamId, Status.ResourceExhausted,
@@ -736,44 +987,26 @@ object GrpcOtlp {
         case None => ()
       }
       try {
-        Spool.commit(new java.io.File(spoolDir, s"${signal.get}_pb"),
+        Spool.commit(new java.io.File(spoolDir, s"${signal}_pb"),
           f"grpc-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x.pb", body)
       } finally controller.foreach(_.release(body.length.toLong))
       obs.requests.incrementAndGet()
       // netstats: framed length is the wire axis, decoded the logical
-      obs.recvWireBytes.addAndGet(mlen)
+      obs.recvWireBytes.addAndGet(framed.length.toLong)
       obs.recvBytes.addAndGet(body.length.toLong)
-      if (auth.isDefined) onAuthenticated(signal.get, authAttrs)
+      if (auth.isDefined) onAuthenticated(signal, authAttrs)
       // success: response HEADERS + one framed response message + trailers
-      val respMsg = partial(signal.get, body) match {
+      val respMsg = partial(signal, body) match {
         case Some((rejected, msg)) => OtlpHttp.partialSuccessPb(rejected, msg)
         case None => Array.empty[Byte]
       }
-      H2.write(out, H2.HEADERS, H2.FlagEndHeaders, streamId, Hpack.encode(
-        Seq(":status" -> "200", "content-type" -> "application/grpc")))
-      val frame = new java.io.ByteArrayOutputStream()
-      frame.write(0)
-      frame.write(Array[Byte](
-        ((respMsg.length >> 24) & 0xFF).toByte, ((respMsg.length >> 16) & 0xFF).toByte,
-        ((respMsg.length >> 8) & 0xFF).toByte, (respMsg.length & 0xFF).toByte))
-      frame.write(respMsg)
-      H2.writeData(out, streamId, frame.toByteArray, endStream = false)
-      H2.write(out, H2.HEADERS, H2.FlagEndHeaders | H2.FlagEndStream,
-        streamId, Hpack.encode(Seq("grpc-status" -> "0")))
-      out.flush()
+      H2.responseHeaders(out, streamId)
+      H2.writeData(out, streamId, H2.grpcFrame(respMsg, compressed = false), endStream = false)
+      H2.trailers(out, streamId, Status.Ok, "", trailersOnly = false)
     }
 
-    private val acceptor = new Thread(() => {
-      try while (running) {
-        val sock = server.accept()
-        val t = new Thread(() => handle(sock), "grpc-conn")
-        t.setDaemon(true); t.start()
-      } catch { case _: java.io.IOException => () }
-    }, "grpc-accept")
-    acceptor.setDaemon(true); acceptor.start()
-
     def boundPort: Int = server.boundPort
-    def stop(): Unit = { running = false; server.close() }
+    def stop(): Unit = server.stop()
     def spoolPath(signal: String): String =
       new java.io.File(spoolDir, s"${signal}_pb").toString
   }
@@ -824,15 +1057,7 @@ object GrpcOtlp {
         graft.pipeline.ConfigNet.Tcp)
       extends graft.pipeline.Pipeline.Exporter {
 
-    private val msgCodec: String = {
-      // none/identity both mean "off" (configgrpc accepts either)
-      val c = if (compression.nonEmpty && compression != "none" &&
-          compression != "identity") compression
-        else if (compression.isEmpty && gzipBody) "gzip" else ""
-      require(c.isEmpty || GrpcCodecs(c),
-        s"unsupported grpc compression '$c' (${GrpcCodecs.mkString("|")})")
-      c
-    }
+    private val msgCodec = grpcEncoding(compression, gzipBody)
 
     private def encodePb(df: DataFrame): DataFrame = signal match {
       case "logs" => OtlpJsonSource.writeLogsPb(df, shardKeys)
@@ -845,81 +1070,31 @@ object GrpcOtlp {
       while (it.hasNext) post(it.next().getAs[Array[Byte]]("body"))
     }
 
-    private def post(msg0: Array[Byte]): Unit = {
-      val sock = graft.pipeline.ConfigNet.connect(
-        transport, host, port, connectTimeoutMs, readTimeoutMs, tls)
+    private def post(msg: Array[Byte]): Unit = {
+      val call = new H2.ClientStream(graft.pipeline.ConfigNet.connect(
+          transport, host, port, connectTimeoutMs, readTimeoutMs, tls),
+        if (pathOverride.nonEmpty) pathOverride else pathOf(signal),
+        s"$host:$port", msgCodec, auth)
       try {
-        val out = new java.io.BufferedOutputStream(sock.out)
-        val in = new java.io.BufferedInputStream(sock.in)
-        H2.handshakeClient(out)
-        val msg = if (msgCodec.nonEmpty) OtlpHttp.Codec.encode(msgCodec, msg0) else msg0
-        val headers = Seq(
-          ":method" -> "POST", ":scheme" -> "http",
-          ":path" -> (if (pathOverride.nonEmpty) pathOverride else pathOf(signal)),
-          ":authority" -> s"$host:$port",
-          "content-type" -> "application/grpc", "te" -> "trailers") ++
-          (if (msgCodec.nonEmpty) Seq("grpc-encoding" -> msgCodec) else Nil) ++
-          // PerRPCCredentials half of auth/client.go: credentials as
-          // request metadata (HTTP/2 requires lowercase names)
-          auth.toSeq.flatMap(_.headers().map { case (k, v) => k.toLowerCase -> v })
-        H2.write(out, H2.HEADERS, H2.FlagEndHeaders, 1, Hpack.encode(headers))
-        val frame = new java.io.ByteArrayOutputStream()
-        frame.write(if (msgCodec.nonEmpty) 1 else 0)
-        frame.write(Array[Byte](
-          ((msg.length >> 24) & 0xFF).toByte, ((msg.length >> 16) & 0xFF).toByte,
-          ((msg.length >> 8) & 0xFF).toByte, (msg.length & 0xFF).toByte))
-        frame.write(msg)
-        H2.writeData(out, 1, frame.toByteArray, endStream = true)
-        out.flush()
-
-        // read until trailers (END_STREAM) for stream 1
-        val decoder = new Hpack.Decoder
-        var headersIn = Map.empty[String, String]
-        val data = new java.io.ByteArrayOutputStream()
-        var done = false
-        while (!done) {
-          val f = H2.read(in)
-          require(f != null, "connection closed before grpc trailers")
-          f.tpe match {
-            case H2.SETTINGS =>
-              if ((f.flags & H2.FlagAck) == 0)
-                H2.write(out, H2.SETTINGS, H2.FlagAck, 0, Array.empty)
-              out.flush()
-            case H2.PING =>
-              if ((f.flags & H2.FlagAck) == 0) {
-                H2.write(out, H2.PING, H2.FlagAck, 0, f.payload); out.flush()
-              }
-            case H2.WINDOW_UPDATE | H2.GOAWAY => ()
-            case H2.HEADERS | H2.CONTINUATION if f.streamId == 1 =>
-              headersIn = headersIn ++ decoder.decode(f.payload).toMap
-              if ((f.flags & H2.FlagEndStream) != 0) done = true
-            case H2.DATA if f.streamId == 1 =>
-              data.write(f.payload)
-              if ((f.flags & H2.FlagEndStream) != 0) done = true
-            case H2.RST_STREAM =>
-              throw new java.io.IOException("stream reset by server")
-            case _ => ()
-          }
-        }
+        val wireBytes = call.sendMessage(msg, endStream = true)
+        val resp = call.message(H2.MaxResponseBytes)
+        while (call.trailers.isEmpty) call.next()
+        val headersIn = call.trailers.get
         val status = headersIn.getOrElse("grpc-status", "2").toInt
         val message = headersIn.getOrElse("grpc-message", "")
         if (status == Status.Ok) {
           obs.foreach { o =>
             o.sentRequests.incrementAndGet()
-            o.sentBytes.addAndGet(msg0.length.toLong)      // logical
-            o.sentWireBytes.addAndGet(msg.length.toLong)   // on the wire
+            o.sentBytes.addAndGet(msg.length.toLong)      // logical
+            o.sentWireBytes.addAndGet(wireBytes.toLong)   // on the wire
           }
-          val resp = data.toByteArray
-          if (resp.length > 5) {
-            val body = java.util.Arrays.copyOfRange(resp, 5, resp.length)
-            OtlpHttp.parsePartialSuccess(body, "application/x-protobuf").foreach {
-              case (rejected, m) =>
-                obs.foreach { o =>
-                  o.partialSuccesses.incrementAndGet()
-                  o.rejectedItems.addAndGet(rejected)
-                }
-                onPartialSuccess(rejected, m)
-            }
+          resp.flatMap(OtlpHttp.parsePartialSuccess(_, "application/x-protobuf")).foreach {
+            case (rejected, m) =>
+              obs.foreach { o =>
+                o.partialSuccesses.incrementAndGet()
+                o.rejectedItems.addAndGet(rejected)
+              }
+              onPartialSuccess(rejected, m)
           }
         } else if (status == Status.ResourceExhausted || status == Status.Unavailable) {
           val delay = headersIn.get("grpc-status-details-bin")
@@ -930,7 +1105,7 @@ object GrpcOtlp {
           throw new graft.pipeline.Pipeline.PermanentExportException(
             s"grpc-status $status from $host:$port: $message")
         }
-      } finally sock.close()
+      } finally call.close()
     }
   }
 }

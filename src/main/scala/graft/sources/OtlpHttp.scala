@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   *
   * Behavior verified against the reference, not its code: the server
   * is the JDK's HttpServer, the client HttpURLConnection — both
-  * public JDK APIs — and the pb partial-success codec is hand-rolled
-  * from the public OTLP wire format like the rest of OtlpProtobuf.
+  * public JDK APIs — and the pb partial-success message goes through
+  * OtlpProtobuf's wire codec.
   */
 object OtlpHttp {
+  import OtlpProtobuf.jsonEscape
 
   /** signal naming + encoders for the three OTLP services */
   private val signals = Map(
@@ -146,36 +147,11 @@ object OtlpHttp {
     * { 1: rejected (varint), 2: error_message (string) } — the same
     * shape for all three services (only the JSON field name of the
     * rejected count differs). */
-  def partialSuccessPb(rejected: Long, msg: String): Array[Byte] = {
-    def varint(v0: Long): Array[Byte] = {
-      var v = v0
-      val out = scala.collection.mutable.ArrayBuffer[Byte]()
-      while ((v & ~0x7FL) != 0L) { out += ((v & 0x7F) | 0x80).toByte; v >>>= 7 }
-      out += (v & 0x7F).toByte
-      out.toArray
-    }
-    val msgB = msg.getBytes("UTF-8")
-    val inner = Array[Byte](0x08) ++ varint(rejected) ++
-      Array[Byte](0x12) ++ varint(msgB.length.toLong) ++ msgB
-    Array[Byte](0x0a) ++ varint(inner.length.toLong) ++ inner
-  }
-
-  /** escape for embedding in a JSON string literal (RFC 8259: quote,
-    * backslash, and control chars) — response bodies interpolate
-    * caller- and client-supplied text */
-  def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
+  def partialSuccessPb(rejected: Long, msg: String): Array[Byte] =
+    OtlpProtobuf.encode(_.lenDelim(1, OtlpProtobuf.encode { w =>
+      w.vint(1, rejected)
+      w.str(2, msg)
+    }))
 
   /** read the IncludeMetadata sidecars of one spool subdir:
     * spooled request file name → lowercased header name → values
@@ -201,7 +177,9 @@ object OtlpHttp {
 
   /** parse (rejected, message) from a 2xx response body in either
     * encoding; proto3 JSON prints int64 as a quoted string but plain
-    * numbers must parse too. Empty / `{}` bodies mean full success. */
+    * numbers must parse too. Empty / `{}` bodies mean full success.
+    * A malformed pb body raises IllegalArgumentException("malformed
+    * protobuf: …"). */
   def parsePartialSuccess(body: Array[Byte],
                                            contentType: String): Option[(Long, String)] = {
     if (body == null || body.isEmpty) return None
@@ -213,45 +191,23 @@ object OtlpHttp {
         .findFirstMatchIn(s).map(_.group(1)).getOrElse("")
       rej.filter(_ > 0L).map(r => (r, msg))
     } else {
-      // hand-rolled pb walk: outer field 1 → inner fields 1 (varint) / 2 (string)
-      var p = 0
-      def varint(): Long = {
-        var shift = 0; var v = 0L; var b = 0
-        do { b = body(p) & 0xFF; p += 1; v |= (b & 0x7FL) << shift; shift += 7 }
-        while ((b & 0x80) != 0)
-        v
-      }
+      // outer field 1 → inner fields 1 (varint) / 2 (string)
+      val r = new OtlpProtobuf.Reader(body, 0, body.length)
       var rejected = 0L
       var msg = ""
-      while (p < body.length) {
-        val tag = varint()
+      while (r.hasNext) {
+        val tag = r.varint()
         if (tag == 0x0a) {
-          val end = { val len = varint().toInt; p + len }
-          while (p < end) {
-            val t2 = varint()
-            t2 match {
-              case 0x08 => rejected = varint()
-              case 0x12 =>
-                val len = varint().toInt
-                msg = new String(body, p, len, "UTF-8"); p += len
-              case other =>
-                // unknown inner field: skip by wire type
-                (other & 0x7) match {
-                  case 0 => varint()
-                  case 2 => val skip = varint().toInt; p += skip
-                  case 5 => p += 4
-                  case 1 => p += 8
-                  case _ => p = end
-                }
-            }
+          val (o, l) = r.lenDelim()
+          val inner = new OtlpProtobuf.Reader(body, o, o + l)
+          while (inner.hasNext) inner.varint() match {
+            case 0x08 => rejected = inner.varint()
+            case 0x12 =>
+              val (mo, ml) = inner.lenDelim()
+              msg = new String(body, mo, ml, "UTF-8")
+            case other => inner.skip((other & 0x7).toInt)
           }
-        } else (tag & 0x7) match {
-          case 0 => varint()
-          case 2 => val skip = varint().toInt; p += skip
-          case 5 => p += 4
-          case 1 => p += 8
-          case _ => p = body.length
-        }
+        } else r.skip((tag & 0x7).toInt)
       }
       if (rejected > 0L) Some((rejected, msg)) else None
     }

@@ -27,6 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * No protobuf library: the wire format is 4 primitives (varint,
   * fixed32/64, length-delimited); a schema-aware reader is ~100 lines
   * and keeps the sandbox dependency-free.
+  *
+  * [[Reader]] and [[Writer]] are graft's only protobuf wire codec:
+  * the transports' own messages (otel-arrow BatchArrowRecords and
+  * BatchStatus in [[ArrowGrpc]], google.rpc.Status + RetryInfo in
+  * [[GrpcOtlp]], Export*PartialSuccess in [[OtlpHttp]]) encode and
+  * decode through them too, so every walk of peer-supplied bytes is
+  * bounds-checked.
   */
 object OtlpProtobuf {
 
@@ -98,7 +105,7 @@ object OtlpProtobuf {
     * diagnosable error, never read out of range or — the killer — let
     * a negative length varint move the cursor backwards into an
     * infinite loop */
-  private final class Reader(val b: Array[Byte], var p: Int, val end: Int) {
+  private[sources] final class Reader(val b: Array[Byte], var p: Int, val end: Int) {
     def hasNext: Boolean = p < end
     def varint(): Long = {
       var x = 0L; var s = 0; var done = false
@@ -169,7 +176,9 @@ object OtlpProtobuf {
     else if (d > 0) "\"Infinity\""
     else "\"-Infinity\""
 
-  private def jsonEscape(s: String): String = {
+  /** escape for embedding in a JSON string literal (RFC 8259: quote,
+    * backslash, and control chars) */
+  private[sources] def jsonEscape(s: String): String = {
     val sb = new StringBuilder(s.length + 8)
     s.foreach {
       case '"'  => sb.append("\\\"")
@@ -703,7 +712,7 @@ object OtlpProtobuf {
   // round trips in CollectorIntegrationSpec). Unparseable numeric
   // strings and non-hex ids drop the field rather than throw.
 
-  private final class Writer {
+  private[sources] final class Writer {
     private val buf = new java.io.ByteArrayOutputStream(256)
     def bytes: Array[Byte] = buf.toByteArray
     def varint(x0: Long): Unit = {
@@ -736,6 +745,13 @@ object OtlpProtobuf {
       while (i < 8) { buf.write(((x >>> (8 * i)) & 0xff).toInt); i += 1 }
     }
     def rawVarint(x: Long): Unit = varint(x)
+  }
+
+  /** the bytes of one message `fill` writes */
+  private[sources] def encode(fill: Writer => Unit): Array[Byte] = {
+    val w = new Writer
+    fill(w)
+    w.bytes
   }
 
   /** packed fixed64 list field from a sub-writer of raw values */

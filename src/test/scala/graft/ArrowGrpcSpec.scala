@@ -517,13 +517,15 @@ class ArrowGrpcSpec extends AnyFunSuite {
     } finally rx.stop()
   }
 
-  test("flow-control ENFORCEMENT: the exporter never overruns a stingy peer's 64 KiB windows and drains on grants") {
-    // a conformant server that does NOT announce big windows: the
-    // protocol-default 65535 governs, grants come back only as data
-    // is consumed, and any overrun is flagged as a violation
+  /** A conformant server that does NOT announce big windows: the
+    * protocol-default 65535 governs, grants come back only as data
+    * is consumed, and any overrun is flagged as a violation. It
+    * serves one call; `respond` answers its first complete gRPC
+    * message. */
+  private final class StingyServer(
+      respond: (java.io.OutputStream, Array[Byte]) => Unit) {
     @volatile var violated = false
     @volatile var maxOutstanding = 0L
-    @volatile var ackedBatch = -1L
     val server = new java.net.ServerSocket(0, 1,
       java.net.InetAddress.getLoopbackAddress)
     val srv = new Thread(() => {
@@ -576,21 +578,8 @@ class ArrowGrpcSpec extends AnyFunSuite {
               if (b.length >= 5) {
                 val mlen = ((b(1) & 0xFF) << 24) | ((b(2) & 0xFF) << 16) |
                   ((b(3) & 0xFF) << 8) | (b(4) & 0xFF)
-                if (b.length >= 5 + mlen) { // complete message → ack OK
-                  val batch = decodeBatch(
-                    java.util.Arrays.copyOfRange(b, 5, 5 + mlen))
-                  ackedBatch = batch.batchId
-                  val enc = encodeStatus(BatchStatus(batch.batchId, 0, ""))
-                  val fr = new java.io.ByteArrayOutputStream()
-                  fr.write(0)
-                  fr.write(Array[Byte](
-                    ((enc.length >> 24) & 0xFF).toByte,
-                    ((enc.length >> 16) & 0xFF).toByte,
-                    ((enc.length >> 8) & 0xFF).toByte,
-                    (enc.length & 0xFF).toByte))
-                  fr.write(enc)
-                  GrpcOtlp.H2.writeData(out, 1, fr.toByteArray, endStream = false)
-                  out.flush()
+                if (b.length >= 5 + mlen) { // complete message → answer it
+                  respond(out, java.util.Arrays.copyOfRange(b, 5, 5 + mlen))
                   done = true
                 }
               }
@@ -600,6 +589,26 @@ class ArrowGrpcSpec extends AnyFunSuite {
       } catch { case _: Throwable => () } finally sock.close()
     }, "stingy-server")
     srv.setDaemon(true); srv.start()
+  }
+
+  test("flow-control ENFORCEMENT: the exporter never overruns a stingy peer's 64 KiB windows and drains on grants") {
+    @volatile var ackedBatch = -1L
+    val stingy = new StingyServer((out, msg) => {
+      val batch = decodeBatch(msg)
+      ackedBatch = batch.batchId
+      val enc = encodeStatus(BatchStatus(batch.batchId, 0, ""))
+      val fr = new java.io.ByteArrayOutputStream()
+      fr.write(0)
+      fr.write(Array[Byte](
+        ((enc.length >> 24) & 0xFF).toByte,
+        ((enc.length >> 16) & 0xFF).toByte,
+        ((enc.length >> 8) & 0xFF).toByte,
+        (enc.length & 0xFF).toByte))
+      fr.write(enc)
+      GrpcOtlp.H2.writeData(out, 1, fr.toByteArray, endStream = false)
+      out.flush()
+    })
+    import stingy._
     try {
       import spark.implicits._
       // ~200 KiB of incompressible-ish payload: forces ≥3 stall/grant
@@ -616,6 +625,34 @@ class ArrowGrpcSpec extends AnyFunSuite {
       assert(maxOutstanding == 65535L, // hit the wall, never past it
         s"window never exercised to its edge: $maxOutstanding")
       assert(ackedBatch == 0L)
+    } finally server.close()
+  }
+
+  test("flow-control ENFORCEMENT: the unary OtlpGrpcExporter never overruns a stingy peer's 64 KiB windows either") {
+    val stingy = new StingyServer((out, _) => {
+      GrpcOtlp.H2.writeData(out, 1, Array[Byte](0, 0, 0, 0, 0), endStream = false)
+      GrpcOtlp.H2.write(out, GrpcOtlp.H2.HEADERS,
+        GrpcOtlp.H2.FlagEndHeaders | GrpcOtlp.H2.FlagEndStream, 1,
+        GrpcOtlp.Hpack.encode(Seq("grpc-status" -> "0")))
+      out.flush()
+    })
+    import stingy._
+    try {
+      import spark.implicits._
+      // one ~200 KiB Export request: ≥3 stall/grant cycles
+      val rnd = new scala.util.Random(7)
+      val recs = (0 until 400).map { i =>
+        s"""{"timeUnixNano":"${1700000000000000000L + i}","body":{"stringValue":"${
+          rnd.alphanumeric.take(512).mkString}"}}"""
+      }.mkString(",")
+      val logs = OtlpJsonSource.parseLogs(Seq(
+        s"""{"resourceLogs":[{"resource":{"attributes":[]},"scopeLogs":[{"scope":{"name":"graft"},"logRecords":[$recs]}]}]}"""
+      ).toDF("json"))
+      GrpcOtlp.OtlpGrpcExporter("localhost", server.getLocalPort, "logs").export(logs)
+      srv.join(10000)
+      assert(!violated, s"window overrun: max outstanding $maxOutstanding")
+      assert(maxOutstanding == 65535L,
+        s"window never exercised to its edge: $maxOutstanding")
     } finally server.close()
   }
 
@@ -1006,7 +1043,11 @@ class ArrowGrpcSpec extends AnyFunSuite {
     } finally rx.stop()
   }
 
-  test("a trailer block split across CONTINUATION frames decodes — the downgrade probe survives a fragmenting server") {
+  /** A server that waits for one call's request HEADERS, answers with
+    * a trailers-only response carrying `trailers`, and closes; `send`
+    * writes the encoded header block as the frames under test. */
+  private def trailersOnlyServer(trailers: Seq[(String, String)])(
+      send: (java.io.OutputStream, Array[Byte]) => Unit): (java.net.ServerSocket, Thread) = {
     val server = new java.net.ServerSocket(0, 2,
       java.net.InetAddress.getLoopbackAddress)
     val t = new Thread(() => {
@@ -1027,25 +1068,68 @@ class ArrowGrpcSpec extends AnyFunSuite {
           } else if (f.tpe == GrpcOtlp.H2.HEADERS &&
               (f.flags & GrpcOtlp.H2.FlagEndHeaders) != 0) opened = true
         }
-        // trailers-only UNIMPLEMENTED with the block CUT mid-bytes:
-        // HEADERS (END_STREAM, no END_HEADERS) + CONTINUATION
-        // (END_HEADERS) — per-frame HPACK decode cannot parse either
-        // half alone
-        val block = GrpcOtlp.Hpack.encode(Seq(":status" -> "200",
-          "content-type" -> "application/grpc",
-          "grpc-status" -> "12", "grpc-message" -> "no arrow here"))
-        val cut = block.length / 2
-        GrpcOtlp.H2.write(out, GrpcOtlp.H2.HEADERS, GrpcOtlp.H2.FlagEndStream,
-          1, java.util.Arrays.copyOfRange(block, 0, cut))
-        GrpcOtlp.H2.write(out, GrpcOtlp.H2.CONTINUATION,
-          GrpcOtlp.H2.FlagEndHeaders, 1,
-          java.util.Arrays.copyOfRange(block, cut, block.length))
+        send(out, GrpcOtlp.Hpack.encode(Seq(":status" -> "200",
+          "content-type" -> "application/grpc") ++ trailers))
         out.flush()
         Thread.sleep(1000) // let the client read before EOF
         sock.close()
       } catch { case _: Throwable => () }
     })
     t.start()
+    (server, t)
+  }
+
+  private val unimplemented =
+    Seq("grpc-status" -> "12", "grpc-message" -> "no arrow here")
+  private val exhausted = Seq("grpc-status" -> "8", "grpc-message" -> "busy",
+    "grpc-status-details-bin" -> GrpcOtlp.statusDetailsBin(8, "busy", 250L))
+
+  // trailers-only response with the block CUT mid-bytes: HEADERS
+  // (END_STREAM, no END_HEADERS) + CONTINUATION (END_HEADERS) —
+  // per-frame HPACK decode cannot parse either half alone
+  private def splitTrailers(out: java.io.OutputStream, block: Array[Byte]): Unit = {
+    val cut = block.length / 2
+    GrpcOtlp.H2.write(out, GrpcOtlp.H2.HEADERS, GrpcOtlp.H2.FlagEndStream,
+      1, java.util.Arrays.copyOfRange(block, 0, cut))
+    GrpcOtlp.H2.write(out, GrpcOtlp.H2.CONTINUATION,
+      GrpcOtlp.H2.FlagEndHeaders, 1,
+      java.util.Arrays.copyOfRange(block, cut, block.length))
+  }
+
+  // trailers-only response, PADDED (0x8) + PRIORITY (0x20) set
+  // together: [padLen=4][5B priority][block][4 pad bytes]. A
+  // conformant server MAY pad — an unstripped client would feed
+  // pad/priority bytes into its HPACK decoder and corrupt
+  private def paddedTrailers(out: java.io.OutputStream, block: Array[Byte]): Unit = {
+    val payload = new java.io.ByteArrayOutputStream()
+    payload.write(4)
+    payload.write(Array[Byte](0, 0, 0, 0, 16), 0, 5)
+    payload.write(block)
+    payload.write(Array[Byte](0, 0, 0, 0), 0, 4)
+    GrpcOtlp.H2.write(out, GrpcOtlp.H2.HEADERS,
+      GrpcOtlp.H2.FlagEndStream | GrpcOtlp.H2.FlagEndHeaders | 0x8 | 0x20,
+      1, payload.toByteArray)
+  }
+
+  /** the unary exporter against a server answering RESOURCE_EXHAUSTED
+    * through `send`: the whole block must decode, RetryInfo included */
+  private def unaryThrottledThrough(
+      send: (java.io.OutputStream, Array[Byte]) => Unit): Unit = {
+    val (server, t) = trailersOnlyServer(exhausted)(send)
+    try {
+      import spark.implicits._
+      val logs = OtlpJsonSource.parseLogs(Seq(mkLogRequest("api", 2)).toDF("json"))
+      val e = intercept[graft.pipeline.Pipeline.ThrottledExportException] {
+        GrpcOtlp.OtlpGrpcExporter("localhost", server.getLocalPort, "logs")
+          .export(logs)
+      }
+      assert(e.getMessage.contains("grpc-status 8"), e.getMessage)
+      assert(e.retryAfterMs == 250L, s"RetryInfo lost: ${e.retryAfterMs}")
+    } finally { t.join(3000); server.close() }
+  }
+
+  test("a trailer block split across CONTINUATION frames decodes — the downgrade probe survives a fragmenting server") {
+    val (server, t) = trailersOnlyServer(unimplemented)(splitTrailers)
     try {
       import spark.implicits._
       val df = Seq("a", "b").toDF("body")
@@ -1061,48 +1145,12 @@ class ArrowGrpcSpec extends AnyFunSuite {
     } finally { t.join(3000); server.close() }
   }
 
+  test("a trailer block split across CONTINUATION frames decodes on the unary exporter: RESOURCE_EXHAUSTED stays retryable") {
+    unaryThrottledThrough(splitTrailers)
+  }
+
   test("server-padded response trailers (PADDED+PRIORITY) decode on the CLIENT — exporter HPACK state survives a padding server") {
-    val server = new java.net.ServerSocket(0, 2,
-      java.net.InetAddress.getLoopbackAddress)
-    val t = new Thread(() => {
-      try {
-        val sock = server.accept()
-        val in = new java.io.BufferedInputStream(sock.getInputStream)
-        val out = new java.io.BufferedOutputStream(sock.getOutputStream)
-        GrpcOtlp.H2.handshakeServer(in, out)
-        var opened = false
-        while (!opened) {
-          val f = GrpcOtlp.H2.read(in)
-          require(f != null)
-          if (f.tpe == GrpcOtlp.H2.SETTINGS &&
-              (f.flags & GrpcOtlp.H2.FlagAck) == 0) {
-            GrpcOtlp.H2.write(out, GrpcOtlp.H2.SETTINGS,
-              GrpcOtlp.H2.FlagAck, 0, Array.empty)
-            out.flush()
-          } else if (f.tpe == GrpcOtlp.H2.HEADERS &&
-              (f.flags & GrpcOtlp.H2.FlagEndHeaders) != 0) opened = true
-        }
-        // trailers-only UNIMPLEMENTED, PADDED (0x8) + PRIORITY (0x20)
-        // set together: [padLen=4][5B priority][block][4 pad bytes].
-        // A conformant server MAY pad — an unstripped client would
-        // feed pad/priority bytes into its HPACK decoder and corrupt
-        val block = GrpcOtlp.Hpack.encode(Seq(":status" -> "200",
-          "content-type" -> "application/grpc",
-          "grpc-status" -> "12", "grpc-message" -> "no arrow here"))
-        val payload = new java.io.ByteArrayOutputStream()
-        payload.write(4)
-        payload.write(Array[Byte](0, 0, 0, 0, 16), 0, 5)
-        payload.write(block)
-        payload.write(Array[Byte](0, 0, 0, 0), 0, 4)
-        GrpcOtlp.H2.write(out, GrpcOtlp.H2.HEADERS,
-          GrpcOtlp.H2.FlagEndStream | GrpcOtlp.H2.FlagEndHeaders | 0x8 | 0x20,
-          1, payload.toByteArray)
-        out.flush()
-        Thread.sleep(1000) // let the client read before EOF
-        sock.close()
-      } catch { case _: Throwable => () }
-    })
-    t.start()
+    val (server, t) = trailersOnlyServer(unimplemented)(paddedTrailers)
     try {
       import spark.implicits._
       val df = Seq("a", "b").toDF("body")
@@ -1116,6 +1164,10 @@ class ArrowGrpcSpec extends AnyFunSuite {
         "padded trailers did not decode to UNIMPLEMENTED — client HPACK corrupted")
       exp.shutdown()
     } finally { t.join(3000); server.close() }
+  }
+
+  test("server-padded response trailers (PADDED+PRIORITY) decode on the unary exporter: RESOURCE_EXHAUSTED stays retryable") {
+    unaryThrottledThrough(paddedTrailers)
   }
 
   test("shutdown waits for an in-flight send and closes its stream with a graceful EOS (no leaked socket)") {

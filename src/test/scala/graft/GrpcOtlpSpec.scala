@@ -397,4 +397,42 @@ class GrpcOtlpSpec extends AnyFunSuite {
       } finally sock.close()
     } finally rx.stop()
   }
+
+  test("receiver stop() severs live connections: a request on a pooled connection opened before stop() is not spooled") {
+    val spool = tmpDir("grpc_stop")
+    val rx = new OtlpGrpcReceiver(0, spool)
+    val sock = new java.net.Socket("localhost", rx.boundPort)
+    try {
+      sock.setSoTimeout(5000)
+      val out = new java.io.BufferedOutputStream(sock.getOutputStream)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      import GrpcOtlp.H2
+      H2.handshakeClient(out)
+      // one unary Export on stream `sid`; true when its trailers came
+      // back, false when the connection was gone
+      def export(sid: Int): Boolean =
+        try {
+          H2.write(out, H2.HEADERS, H2.FlagEndHeaders, sid, GrpcOtlp.Hpack.encode(Seq(
+            ":method" -> "POST", ":scheme" -> "http",
+            ":path" -> GrpcOtlp.pathOf("logs"), ":authority" -> "localhost",
+            "content-type" -> "application/grpc", "te" -> "trailers")))
+          H2.writeData(out, sid, Array[Byte](0, 0, 0, 0, 3, 7, 7, 7), endStream = true)
+          out.flush()
+          var answered = false
+          var f = H2.read(in)
+          while (f != null && !answered) {
+            if (f.tpe == H2.HEADERS && f.streamId == sid &&
+                (f.flags & H2.FlagEndStream) != 0) answered = true
+            else f = H2.read(in)
+          }
+          answered
+        } catch { case _: java.io.IOException => false }
+      assert(export(1))
+      assert(rx.obs.requests.get == 1)
+      rx.stop()
+      assert(!export(3), "the receiver answered a request after stop()")
+      assert(rx.obs.requests.get == 1)
+      assert(new java.io.File(rx.spoolPath("logs")).list().length == 1)
+    } finally { sock.close(); rx.stop() }
+  }
 }
