@@ -76,9 +76,8 @@ object Pipeline {
     @transient @volatile private var controller: graft.streaming.Scrape.Controller = _
     def read(spark: SparkSession): DataFrame = {
       new java.io.File(spoolDir).mkdirs()
-      graft.sources.Spool.readStream(spark, maxFilesPerTrigger)
-        .schema(graft.model.OtelModel.metricPointSchema)
-        .parquet(spoolDir)
+      graft.sources.Spool.parquetFiles(spark, spoolDir, graft.model.OtelModel.metricPointSchema,
+        maxFilesPerTrigger)
     }
     def start(spark: SparkSession): Unit = synchronized {
       if (controller == null) {
@@ -168,8 +167,7 @@ object Pipeline {
     def read(spark: SparkSession): DataFrame = {
       val dir = new java.io.File(spoolDir, "lines")
       dir.mkdirs()
-      graft.sources.Spool.readStream(spark, maxFilesPerTrigger)
-        .text(dir.toString)
+      graft.sources.Spool.textLines(spark, dir.toString, maxFilesPerTrigger)
     }
     def start(spark: SparkSession): Unit = synchronized {
       if (server == null)

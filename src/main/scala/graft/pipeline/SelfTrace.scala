@@ -253,7 +253,7 @@ object SelfTrace {
     private def hex(bytes: Int): String = {
       val b = new Array[Byte](bytes)
       rng.nextBytes(b)
-      val s = b.map(x => f"$x%02x").mkString
+      val s = graft.sources.OtlpProtobuf.hex(b, 0, bytes)
       // all-zero ids are invalid in W3C trace context — re-draw
       if (s.forall(_ == '0')) hex(bytes) else s
     }

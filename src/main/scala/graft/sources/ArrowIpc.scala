@@ -628,31 +628,19 @@ object ArrowIpc {
 
   def streamSpoolWithDlq(spark: SparkSession, dir: String, schema: StructType,
                          maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) =
-    parseWithDlq(Spool.readStream(spark, maxFilesPerTrigger).format("binaryFile")
-      .schema(binaryFileSchema)
-      .load(dir)
-      .select(col("content").as("ipc")), schema)
+    parseWithDlq(Spool.binaryFiles(spark, dir, maxFilesPerTrigger).select(col("content").as("ipc")), schema)
 
   /** batch receiver: read a spool directory of .arrow files */
   def readSpool(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     parse(spark.read.format("binaryFile").load(dir)
       .select(col("content").as("ipc")), schema)
 
-  private val binaryFileSchema = StructType(Seq(
-    StructField("path", StringType),
-    StructField("modificationTime", TimestampType),
-    StructField("length", LongType),
-    StructField("content", BinaryType)))
-
   /** streaming receiver: tail the spool directory (the arrow.go
     * receive loop minus gRPC framing — each file is one
     * BatchArrowRecords payload) */
   def streamSpool(spark: SparkSession, dir: String, schema: StructType,
                   maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    parse(Spool.readStream(spark, maxFilesPerTrigger).format("binaryFile")
-      .schema(binaryFileSchema)
-      .load(dir)
-      .select(col("content").as("ipc")), schema)
+    parse(Spool.binaryFiles(spark, dir, maxFilesPerTrigger).select(col("content").as("ipc")), schema)
 
   // ---- flattened-contract schemas (derived, never hand-copied) -----
 
@@ -718,23 +706,14 @@ object ArrowIpc {
     private val counter = new java.util.concurrent.atomic.AtomicLong
     val payloads = new java.util.concurrent.atomic.AtomicLong
     val deadLettered = new java.util.concurrent.atomic.AtomicLong
-    private val server: java.net.ServerSocket = tls match {
-      case None => new java.net.ServerSocket(
-        port, 50, java.net.InetAddress.getLoopbackAddress)
-      case Some(cfg) => // configtls on the socket transport: identity
-        // + optional mTLS, same config surface as the HTTP receiver
-        val ss = cfg.sslContext().getServerSocketFactory
-          .createServerSocket(port, 50,
-            java.net.InetAddress.getLoopbackAddress)
-          .asInstanceOf[javax.net.ssl.SSLServerSocket]
-        ss.setSSLParameters(cfg.serverParameters(ss.getSSLParameters))
-        ss
-    }
+    // configtls on the socket transport: identity + optional mTLS, the
+    // same config surface as the HTTP receiver
+    private val server = graft.pipeline.ConfigNet.listen(graft.pipeline.ConfigNet.Tcp, port, tls)
     @volatile private var running = true
 
-    private def handle(sock: java.net.Socket): Unit = {
+    private def handle(sock: graft.pipeline.ConfigNet.Conn): Unit = {
       val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(sock.getInputStream, "US-ASCII"))
+        new java.io.InputStreamReader(sock.in, "US-ASCII"))
       try {
         var line = in.readLine()
         while (line != null) {
@@ -785,7 +764,7 @@ object ArrowIpc {
     }, "arrow-gateway-accept")
     acceptor.setDaemon(true); acceptor.start()
 
-    def boundPort: Int = server.getLocalPort
+    def boundPort: Int = server.boundPort
     def stop(): Unit = { running = false; server.close() }
   }
 

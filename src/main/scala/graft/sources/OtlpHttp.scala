@@ -160,8 +160,9 @@ object OtlpHttp {
                         sub: String): Map[String, Map[String, Seq[String]]] = {
     import scala.jdk.CollectionConverters._
     val d = new java.io.File(spoolDir, sub)
+    // hidden names are sidecars still being committed (Spool.commit)
     val metas = Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".meta"))
+      .filter(f => f.isFile && !f.getName.startsWith(".") && f.getName.endsWith(".meta"))
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     metas.map { f =>
       val parsed = mapper.readValue(f,
@@ -497,15 +498,14 @@ object OtlpHttp {
           val dir = new java.io.File(spoolDir, sub)
           val name = f"req-${counter.incrementAndGet()}%08d-${System.nanoTime()}%x" +
             (if (isPb) ".pb" else ".json")
-          Spool.commit(dir, name, body)
           // IncludeMetadata: request headers → durable client-metadata
-          // sidecar, AFTER the payload commits (a sidecar never
-          // exists without its request; a crash in between degrades
-          // to include_metadata=false for that one request). Names
-          // lowercase, multi-values preserved — client.Metadata's
-          // canonical shape. Auth attributes ride the same sidecar
-          // under `auth.` keys, the _client.auth merge the attach
-          // performs.
+          // sidecar, committed BEFORE the payload, so a stream that
+          // admits the request finds its sidecar complete (a crash in
+          // between leaves a sidecar without a request, which no stream
+          // reads). Names lowercase, multi-values preserved —
+          // client.Metadata's canonical shape. Auth attributes ride the
+          // same sidecar under `auth.` keys, the _client.auth merge the
+          // attach performs.
           if (includeMetadata) {
             import scala.jdk.CollectionConverters._
             val hdrs = ex.getRequestHeaders.asScala.toSeq
@@ -526,10 +526,9 @@ object OtlpHttp {
             val json = (hdrs ++ authKv ++ traceKv).map { case (k, vs) =>
               s""""${jsonEscape(k)}":[${vs.map(v => s""""${jsonEscape(v)}"""").mkString(",")}]"""
             }.mkString("{", ",", "}")
-            java.nio.file.Files.write(
-              new java.io.File(dir, s"$name.meta").toPath,
-              json.getBytes("UTF-8"))
+            Spool.commit(dir, s"$name.meta", json.getBytes("UTF-8"))
           }
+          Spool.commit(dir, name, body)
         } finally controller.foreach(_.release(body.length.toLong))
         obs.requests.incrementAndGet()
         // netstats: wire bytes as transmitted vs decoded payload bytes

@@ -751,8 +751,8 @@ object OtlpJsonSource {
           // duplicate files, no commit protocol needed. A name
           // collision requires byte-identical requests in one
           // partition, impossible across disjoint ranged batches.
-          val digest = java.security.MessageDigest.getInstance("MD5")
-            .digest(pb).map("%02x".format(_)).mkString
+          val md5 = java.security.MessageDigest.getInstance("MD5").digest(pb)
+          val digest = OtlpProtobuf.hex(md5, 0, md5.length)
           val path = new org.apache.hadoop.fs.Path(outDir,
             f"compact-$pid%05d-${pb.length}%08x-$digest.pb")
           val fs = path.getFileSystem(hconf.value.value)
@@ -802,17 +802,9 @@ object OtlpJsonSource {
 
   private def streamPbFiles(spark: SparkSession, dir: String,
                             maxFilesPerTrigger: Option[Int]): DataFrame =
-    Spool.readStream(spark, maxFilesPerTrigger)
-      .format("binaryFile")
-      .schema(StructType(Seq(  // binaryFile's fixed schema (streaming sources don't infer)
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      // spool dirs may hold non-payload siblings (IncludeMetadata
-      // `.meta` sidecars); only committed request payloads are pb
-      .option("pathGlobFilter", "*.pb")
-      .load(dir)
+    // spool dirs may hold non-payload siblings (IncludeMetadata
+    // `.meta` sidecars); only committed request payloads are pb
+    Spool.binaryFiles(spark, dir, maxFilesPerTrigger, glob = Some("*.pb"))
       .select(col("content").as("pb"))
 
   /** Streaming OTLP-protobuf file receivers: tail a directory of
@@ -928,15 +920,13 @@ object OtlpJsonSource {
 
   /** Streaming OTLP-JSON file receiver: tail a directory of request
     * documents (one JSON per line). Each trigger admits up to one
-    * maximal request's bytes ([[Spool.readStream]]). That bounds a
+    * maximal request's bytes ([[Spool.textLines]]). That bounds a
     * batch; it is not the memory limiter, whose refusal and
     * backpressure are the receivers' admission control and
     * `StreamingPipelines.exportStreamAdmitted`/`exportStreamBytesBudget`.
     */
   def streamLogs(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    parseLogs(Spool.readStream(spark, maxFilesPerTrigger)
-      .text(dir)
-      .select(col("value").as("json")))
+    parseLogs(Spool.textLines(spark, dir, maxFilesPerTrigger).select(col("value").as("json")))
 
   /** events table → logSchema (the testdata stand-in receiver) */
   def eventsAsLogs(spark: SparkSession, dir: String): DataFrame = {

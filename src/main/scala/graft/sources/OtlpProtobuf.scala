@@ -150,7 +150,7 @@ object OtlpProtobuf {
   private def utf8(b: Array[Byte], off: Int, len: Int): String =
     new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8)
 
-  private val HexDigits = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private[graft] val HexDigits = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
   /** lowercase hex of b[off, off+len) as ASCII bytes */
   private def hexBytes(b: Array[Byte], off: Int, len: Int): Array[Byte] = {
@@ -164,7 +164,9 @@ object OtlpProtobuf {
     out
   }
 
-  private def hex(b: Array[Byte], off: Int, len: Int): String =
+  /** lowercase hex of b[off, off+len), two digits per byte: the one
+    * byte-to-hex formatter graft's ids, digests and file names use */
+  private[graft] def hex(b: Array[Byte], off: Int, len: Int): String =
     new String(hexBytes(b, off, len), java.nio.charset.StandardCharsets.US_ASCII)
 
   /** JSON form of a double per the OTLP/JSON mapping: ordinary values

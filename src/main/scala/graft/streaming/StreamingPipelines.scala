@@ -23,9 +23,10 @@ object StreamingPipelines {
     * bit-identical to the SQL md5 kernels (oracle parity is
     * load-bearing: one drifted copy silently breaks a batch ==
     * streaming contract). */
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  private def md5Hex(s: String): String = {
+    val d = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+    graft.sources.OtlpProtobuf.hex(d, 0, d.length)
+  }
 
   /** tumbling-window counts/sums per key with a watermark. Input
     * needs an event-time `ts` timestamp column. Late data beyond

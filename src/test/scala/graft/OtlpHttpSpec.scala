@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Pipeline
@@ -325,6 +327,49 @@ class OtlpHttpSpec extends AnyFunSuite {
         assert(rxg.obs.counters("recv_bytes") == obsg.sentBytes.get)
       } finally rxg.stop()
     } finally rx.stop()
+  }
+
+  test("include_metadata: every request a listing of the spool shows already has a complete sidecar") {
+    import PbWire._
+    val spool = tmpDir("otlp_http_meta_race")
+    val rx = new OtlpHttpReceiver(0, spool, includeMetadata = true)
+    val dir = new java.io.File(spool, "logs_pb")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var sending = true
+    var listed = 0L
+    val lister = new Thread(() => while (sending) {
+      Option(dir.list()).getOrElse(Array.empty[String])
+        .filter(n => !n.startsWith(".") && n.endsWith(".pb")).foreach { n =>
+          listed += 1
+          val meta = new java.io.File(dir, s"$n.meta")
+          try mapper.readTree(meta) catch { case e: java.io.IOException => bad.add(s"$n: $e") }
+        }
+    }, "sidecar-lister")
+    try {
+      lister.start()
+      val uri = java.net.URI.create(s"http://localhost:${rx.boundPort}/v1/logs")
+      val senders = (0 until 4).map { t =>
+        val th = new Thread(() => {
+          val client = java.net.http.HttpClient.newHttpClient()
+          (t until 200 by 4).foreach { i =>
+            val body = request(Seq("service.name" -> str(1, s"svc$i")), "graft",
+              fixed64(1, 1000L + i) ++ vint(2, 9) ++ lenDelim(5, str(1, s"m$i")))
+            val resp = client.send(java.net.http.HttpRequest.newBuilder(uri)
+              .header("Content-Type", "application/x-protobuf").header("X-Req", i.toString)
+              .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+              java.net.http.HttpResponse.BodyHandlers.discarding())
+            if (resp.statusCode != 200) bad.add(s"request $i: HTTP ${resp.statusCode}")
+          }
+        }, s"sidecar-sender-$t")
+        th.start(); th
+      }
+      senders.foreach(_.join(60000))
+    } finally { sending = false; lister.join(10000); rx.stop() }
+    assert(bad.isEmpty, bad.asScala.take(5))
+    assert(listed > 0)
+    val meta = OtlpHttp.readSpoolMetadata(spool, "logs_pb")
+    assert(meta.size == 200 && meta.values.map(_("x-req").head.toInt).toSet == (0 until 200).toSet)
   }
 
   test("client headers + include_metadata: configured headers ride every request and land as durable client metadata") {

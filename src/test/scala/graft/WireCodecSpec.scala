@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{GrpcOtlp, OtlpHttp}
+import graft.sources.{GrpcOtlp, OtlpHttp, OtlpProtobuf}
 import graft.sources.ArrowGrpc._
 
 /** The protobuf messages graft's transports hand-roll next to OTLP
@@ -50,5 +50,16 @@ class WireCodecSpec extends AnyFunSuite {
     assert(e.getMessage.startsWith("malformed protobuf: "), e.getMessage)
     val details = java.util.Base64.getEncoder.withoutPadding.encodeToString(bad)
     assert(within5s(GrpcOtlp.retryDelayMsOf(details)) == 0L)
+  }
+
+  test("the shared hex formatter matches per-byte %02x over random bytes, offsets included") {
+    val rnd = new scala.util.Random(7)
+    (0 until 200).foreach { _ =>
+      val b = Array.fill(rnd.nextInt(40))(rnd.nextInt(256).toByte)
+      val off = if (b.isEmpty) 0 else rnd.nextInt(b.length)
+      val len = rnd.nextInt(b.length - off + 1)
+      assert(OtlpProtobuf.hex(b, 0, b.length) == b.map("%02x".format(_)).mkString)
+      assert(OtlpProtobuf.hex(b, off, len) == b.slice(off, off + len).map(x => f"$x%02x").mkString)
+    }
   }
 }
